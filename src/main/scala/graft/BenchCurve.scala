@@ -90,7 +90,7 @@ object BenchCurve {
       Ann.ivfBqSave(Ann.ivfBqBuild(ivf), s"$base/ivfbq")
       val buildHy = (System.nanoTime() - tHy0) / 1e9
       val hy = Ann.ivfBqLoad(spark, s"$base/ivfbq")
-      val probeHy = timed(Ann.ivfBqTopKBatch(
+      val probeHy = timed(Ann.ivfBqTopK(
         hy, queries, "id", "v", k, nProbe, oversample = 8))
       // fixed-size ingest batches onto the grown layout: raw append,
       // then the ledgered path (stage → snapshot touched dirs →

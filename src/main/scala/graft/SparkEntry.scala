@@ -634,6 +634,12 @@ object SparkEntry {
         min(col("self_ok")).as("self_hit"))
   }
 
+  /** `df` collected into a driver-resident (`LocalRelation`) frame —
+    * the shape of a single query the caller already holds, which
+    * [[graft.operators.Ann.ivfBqTopK]] serves with its driver placement. */
+  private[graft] def driverFrame(df: DataFrame): DataFrame =
+    df.sparkSession.createDataFrame(java.util.Arrays.asList(df.collect(): _*), df.schema)
+
   /** Multiset equality of two frames via the two anti-differences.
     * Both sides are checkpointed FIRST so each plan (typically an index
     * probe and a brute-force baseline) computes exactly once — the
@@ -3018,9 +3024,10 @@ object SparkEntry {
       val e = Tables.embeddings(s, dir)
       val n = e.count().toInt
       val q = e.filter(col("vec_id") < 5)
+      val ql = driverFrame(q)
       val hy = cachedIvfBq(s, dir)
       // probe materialized ONCE (r19): collect + self-hit count share it
-      val approx = Ann.ivfBqTopK(hy, q, "vec_id", "embedding",
+      val approx = Ann.ivfBqTopK(hy, ql, "vec_id", "embedding",
         k = 5, nProbe = 4, oversample = 16).localCheckpoint(true)
       val exact = Ann.bruteForceTopK(e, "vec_id", "embedding",
         q, "vec_id", "embedding", k = 5)
@@ -3033,13 +3040,13 @@ object SparkEntry {
         val hits = a.keys.count { case (qid, id) => exTop(qid).contains(id) }
         hits.toDouble / ex.size >= 0.8
       }
-      val total = Ann.ivfBqTopK(hy, q, "vec_id", "embedding",
+      val total = Ann.ivfBqTopK(hy, ql, "vec_id", "embedding",
         k = 3, nProbe = 8, oversample = n / 3 + 1)
       val brute = Ann.bruteForceTopK(e, "vec_id", "embedding",
         q, "vec_id", "embedding", k = 3)
       val totalExact = sameMultiset(total, brute)
       val allow = e.filter(col("vec_id") % 2 === 0).select(col("vec_id"))
-      val gatedRes = Ann.ivfBqTopK(hy, q, "vec_id", "embedding",
+      val gatedRes = Ann.ivfBqTopK(hy, ql, "vec_id", "embedding",
         k = 5, nProbe = 8, oversample = n / 5 + 1, allowed = Some(allow))
       // one pass (r19): (odd-id count, total) in a single aggregate —
       // the old filter().count() / count() pair ran the gated probe twice
@@ -3088,7 +3095,7 @@ object SparkEntry {
       val countOk = idx.lists.count() == nAll - 2
       val cur = e.filter(!col("vec_id").isin(0L, 1L))
       val q = cur.filter(col("vec_id") < 7)
-      val probe = Ann.ivfBqTopK(idx, q, "vec_id", "embedding",
+      val probe = Ann.ivfBqTopK(idx, driverFrame(q), "vec_id", "embedding",
         k = 3, nProbe = 8, oversample = nAll.toInt)
       val brute = Ann.bruteForceTopK(cur, "vec_id", "embedding",
         q, "vec_id", "embedding", k = 3)
@@ -3099,35 +3106,38 @@ object SparkEntry {
           "delete_touched_bounded", "delete_bounded", "count_ok", "probe_exact")
     }),
 
-    // ANN: hybrid probe for DataFrame-sized query batches — pure join
-    // pipeline, NO driver collect (probe selection distributed, list
-    // selection an equi join, nomination over (id, sig) only, exact
-    // rerank join). Contract: at the degenerate point it equals brute
-    // force VERBATIM, and at the real operating point it equals the
-    // collect-probe variant row-for-row (identical deterministic probe
-    // ordering by construction).
+    // ANN: the hybrid probe's two placements. A query frame that is not
+    // driver-resident takes the DISTRIBUTED placement — pure join
+    // pipeline, nothing query-sized through the driver (probe selection
+    // distributed, nomination over (id, sig) only, exact rerank join);
+    // the same queries collected into a local frame take the DRIVER
+    // placement. Contract: at the degenerate point the distributed
+    // placement equals brute force VERBATIM, and at the real operating
+    // point the two placements are row-identical (same deterministic
+    // probe ordering by construction).
     "ann_ivfbq_batch" -> ((s, dir) => {
       import s.implicits._
       val e = Tables.embeddings(s, dir)
       val n = e.count().toInt
       val q = e.filter(col("vec_id") < 5)
       val hy = cachedIvfBq(s, dir)
-      val total = Ann.ivfBqTopKBatch(hy, q, "vec_id", "embedding",
+      val total = Ann.ivfBqTopK(hy, q, "vec_id", "embedding",
         k = 3, nProbe = 8, oversample = n / 3 + 1)
       val brute = Ann.bruteForceTopK(e, "vec_id", "embedding",
         q, "vec_id", "embedding", k = 3)
       val totalExact = sameMultiset(total, brute)
       // batch probe materialized ONCE (r19): the multiset equality and
       // the self-hit count share the checkpoint
-      val batchOp = Ann.ivfBqTopKBatch(hy, q, "vec_id", "embedding",
+      val batchOp = Ann.ivfBqTopK(hy, q, "vec_id", "embedding",
         k = 5, nProbe = 4, oversample = 16).localCheckpoint(true)
-      val collectOp = Ann.ivfBqTopK(hy, q, "vec_id", "embedding",
+      val collectOp = Ann.ivfBqTopK(hy, driverFrame(q), "vec_id", "embedding",
         k = 5, nProbe = 4, oversample = 16)
       val batchEqCollect = sameMultiset(batchOp, collectOp)
       val selfHit = batchOp.filter(col("rank") === 1 && col("qid") === col("id")).count() == 5
-      // O4 gate on the batch twin: same semi-join-before-scan contract
+      // O4 gate on the distributed placement: same semi-join-before-scan
+      // contract
       val allow = e.filter(col("vec_id") % 2 === 0).select(col("vec_id"))
-      val gatedB = Ann.ivfBqTopKBatch(hy, q, "vec_id", "embedding",
+      val gatedB = Ann.ivfBqTopK(hy, q, "vec_id", "embedding",
         k = 5, nProbe = 8, oversample = n / 5 + 1, allowed = Some(allow))
       // one pass (r19), same booleans as the old two-count form
       val gb = gatedB.agg(count(lit(1)).as("n"),
@@ -3167,7 +3177,7 @@ object SparkEntry {
       val corpus = e.select(col("vec_id"), col("embedding").cast("array<double>"))
         .unionByName(batch.select(col("vec_id"), col("embedding")))
       val q = e.filter(col("vec_id") < 5)
-      val approx = Ann.ivfBqTopK(Ann.ivfBqLoad(s, path), q, "vec_id", "embedding",
+      val approx = Ann.ivfBqTopK(Ann.ivfBqLoad(s, path), driverFrame(q), "vec_id", "embedding",
         k = 3, nProbe = 6, oversample = 64)
       val exact = Ann.bruteForceTopK(corpus, "vec_id", "embedding",
         q, "vec_id", "embedding", k = 3)
@@ -4908,7 +4918,7 @@ object SparkEntry {
       val cur = e.filter(!col("vec_id").isin(3L, 7L))
       val n = cur.count().toInt
       val q = cur.filter(col("vec_id") < 6)
-      val probe = Ann.ivfBqTopK(idx, q, "vec_id", "embedding",
+      val probe = Ann.ivfBqTopK(idx, driverFrame(q), "vec_id", "embedding",
         k = 3, nProbe = 8, oversample = n / 3 + 1)
       val brute = Ann.bruteForceTopK(cur, "vec_id", "embedding",
         q, "vec_id", "embedding", k = 3)
@@ -4948,7 +4958,7 @@ object SparkEntry {
       }
       def probe(): Seq[String] = {
         val idx = Ann.ivfBqLoad(s, path)
-        Ann.ivfBqTopK(idx, e.filter(col("vec_id") < 3), "vec_id", "embedding",
+        Ann.ivfBqTopK(idx, driverFrame(e.filter(col("vec_id") < 3)), "vec_id", "embedding",
           k = 3, nProbe = 2, oversample = 4).collect().map(_.toString).sorted.toSeq
       }
       run()

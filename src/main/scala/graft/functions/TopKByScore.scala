@@ -42,16 +42,6 @@ case class TopKByScore(
 
   require(k > 0, s"topK requires k > 0, got $k")
 
-  /** Heap ordering: the queue's head (max by this ordering) is the WORST
-    * element — lowest score, ties resolved worst = larger id — so evicting
-    * the head keeps exactly the `ORDER BY score DESC, id ASC LIMIT k` set. */
-  private val worstFirst: Ordering[ScoredId] = new Ordering[ScoredId] {
-    def compare(a: ScoredId, b: ScoredId): Int = {
-      val c = java.lang.Double.compare(b.score, a.score)
-      if (c != 0) c else a.id.compareTo(b.id)
-    }
-  }
-
   override def checkInputDataTypes(): TypeCheckResult =
     if (score.dataType == DoubleType && id.dataType == StringType) {
       TypeCheckResult.TypeCheckSuccess
@@ -68,12 +58,10 @@ case class TopKByScore(
     containsNull = false)
 
   override def createAggregationBuffer(): mutable.PriorityQueue[ScoredId] =
-    mutable.PriorityQueue.empty(worstFirst)
+    TopKByScore.emptyHeap()
 
-  private def insert(buf: mutable.PriorityQueue[ScoredId], e: ScoredId): Unit = {
-    if (buf.size < k) buf.enqueue(e)
-    else if (worstFirst.compare(e, buf.head) < 0) { buf.dequeue(); buf.enqueue(e) }
-  }
+  private def insert(buf: mutable.PriorityQueue[ScoredId], e: ScoredId): Unit =
+    TopKByScore.offer(buf, e, k)
 
   override def update(
       buf: mutable.PriorityQueue[ScoredId], input: InternalRow): mutable.PriorityQueue[ScoredId] = {
@@ -95,9 +83,7 @@ case class TopKByScore(
   }
 
   override def eval(buf: mutable.PriorityQueue[ScoredId]): Any = {
-    // sorted ascending by worstFirst = least-worst first = best-first
-    val sorted = buf.toArray.sorted(worstFirst)
-    new GenericArrayData(sorted.map(e => InternalRow(e.score, e.id): Any))
+    new GenericArrayData(TopKByScore.bestFirst(buf).map(e => InternalRow(e.score, e.id): Any))
   }
 
   override def serialize(buf: mutable.PriorityQueue[ScoredId]): Array[Byte] = {
@@ -141,6 +127,30 @@ case class TopKByScore(
 }
 
 object TopKByScore {
+  /** Heap ordering: the queue's head (max by this ordering) is the WORST
+    * element — lowest score, ties resolved worst = larger id — so evicting
+    * the head keeps exactly the `ORDER BY score DESC, id ASC LIMIT k` set. */
+  private[graft] val worstFirst: Ordering[ScoredId] = new Ordering[ScoredId] {
+    def compare(a: ScoredId, b: ScoredId): Int = {
+      val c = java.lang.Double.compare(b.score, a.score)
+      if (c != 0) c else a.id.compareTo(b.id)
+    }
+  }
+
+  private[graft] def emptyHeap(): mutable.PriorityQueue[ScoredId] =
+    mutable.PriorityQueue.empty(worstFirst)
+
+  /** Offer one candidate to a heap bounded at `k`. */
+  private[graft] def offer(buf: mutable.PriorityQueue[ScoredId], e: ScoredId, k: Int): Unit = {
+    if (buf.size < k) buf.enqueue(e)
+    else if (worstFirst.compare(e, buf.head) < 0) { buf.dequeue(); buf.enqueue(e) }
+  }
+
+  /** The heap's candidates best-first: sorted ascending by [[worstFirst]]
+    * = least-worst first. */
+  private[graft] def bestFirst(buf: mutable.PriorityQueue[ScoredId]): Array[ScoredId] =
+    buf.toArray.sorted(worstFirst)
+
   /** Column API: collect the top-k (score, id) pairs per group. */
   def topk(score: Column, id: Column, k: Int): Column =
     ColumnBridge.column(

@@ -11,12 +11,9 @@ import org.apache.spark.sql.functions._
   * expressions (no UDFs), so they stay inside whole-stage codegen and
   * survive predicate pushdown / column pruning at cluster scale.
   *
-  * Two precision families:
-  *  - `*D` variants fold left-to-right in DOUBLE. Deterministic (same
-  *    sequential association every run/engine), used on the oracle-checked
-  *    query path.
-  *  - `*F` variants accumulate in FLOAT, mirroring the reference's f32
-  *    arithmetic (lib.rs:24) for behavioral parity with the Rust engine.
+  * Every variant folds left-to-right in DOUBLE: deterministic (same
+  * sequential association every run/engine), the precision of the
+  * oracle-checked query path.
   */
 object VectorFunctions {
 
@@ -69,13 +66,4 @@ object VectorFunctions {
     * lambda must not re-evaluate an aggregate over the whole array). */
   def normalizeD(v: Column, norm: Column): Column =
     transform(v, x => x.cast("double") / norm)
-
-  /** Normalize and keep FLOAT element type — the stored-vector layout
-    * (reference stores a normalized f32 matrix, lib.rs:44-45). */
-  def normalizeF(v: Column, norm: Column): Column =
-    transform(v, x => (x.cast("double") / norm).cast("float"))
-
-  /** f32-accumulating dot product — reference parity (lib.rs:330-343). */
-  def dotF(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0f), (acc, x) => acc + x)
 }

@@ -1,10 +1,13 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.BoundReference
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.functions.VectorFunctions._
-import graft.functions.TopKByScore
+import graft.functions.{ScoredId, TopKByScore}
 
 /** Similarity search over an embedding column.
   *
@@ -371,13 +374,39 @@ object Ann {
 
   /** Load a persisted IVF index. The partition column prunes at probe
     * time: only the selected clusters' files are read. */
-  def ivfLoad(spark: org.apache.spark.sql.SparkSession, path: String): IvfIndex = {
-    val assigned = spark.read.parquet(s"$path/lists")
-    val centroids = spark.read.json(s"$path/centroids")
-      .select(col("cluster").cast("int"), col("cvec"))
-      .collect()
-      .map(r => (r.getInt(0), r.getSeq[Double](1).toSeq)).toSeq
-    IvfIndex(centroids, assigned)
+  def ivfLoad(spark: org.apache.spark.sql.SparkSession, path: String): IvfIndex =
+    IvfIndex(readClusterSidecar(spark, s"$path/centroids"),
+      spark.read.parquet(s"$path/lists"))
+
+  /** Driver-side read of a per-cluster JSON sidecar (`centroids`,
+    * `centnorm`: one `{"cluster": c, "<vecField>": [...]}` line per
+    * cluster in the part files of a `coalesce(1)` JSON write) through
+    * Hadoop FS + Jackson — no Spark job, where `spark.read.json(dir)`
+    * pays a schema-inference job and a scan job. Same rows in the same
+    * order with the same doubles: Spark's JSON writer prints each double
+    * in its round-tripping `Double.toString` form (non-finite values as
+    * quoted strings) and its reader parses it with the same Jackson
+    * parser; files named `_…`/`.…` are skipped as Spark skips them. */
+  private[operators] def readClusterSidecar(spark: org.apache.spark.sql.SparkSession,
+      dir: String, vecField: String = "cvec"): Seq[(Int, Seq[Double])] = {
+    val root = new org.apache.hadoop.fs.Path(dir)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    def num(n: com.fasterxml.jackson.databind.JsonNode): Double =
+      if (n.isTextual) java.lang.Double.parseDouble(n.asText()) else n.asDouble()
+    fs.listStatus(root).toSeq.map(_.getPath)
+      .filterNot(p => p.getName.startsWith("_") || p.getName.startsWith("."))
+      .sortBy(_.getName)
+      .flatMap { p =>
+        val in = fs.open(p)
+        val lines = try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList
+          finally in.close()
+        lines.filter(_.trim.nonEmpty).map { line =>
+          val node = mapper.readTree(line)
+          val v = node.get(vecField)
+          (node.get("cluster").asInt(), (0 until v.size).map(i => num(v.get(i))))
+        }
+      }
   }
 
   /** IVF probe: rank centroids per query by cosine, take the nProbe
@@ -1320,86 +1349,82 @@ object Ann {
           graft.functions.VectorNormalize.normalize(col("v"), outputFloat = false))))
 
   /** Hybrid probe: (1) rank centroids per query and keep the nProbe
-    * nearest lists — the probe table is Q x nProbe rows, collected once
-    * so the probed cluster ids become a STATIC isin filter (file-listing
-    * partition pruning on an [[ivfBqSave]]d layout, same argument as
-    * [[ivfTopK]]); (2) Hamming-nominate `k * oversample` candidates per
-    * query with the codegen XOR+POPCNT kernel over ONLY the probed
-    * lists' (id, sig) columns; (3) rerank the nominees exactly against
-    * their float rows — a broadcast-sized join back to the same pruned
-    * scan, projecting (id, v) this time. Emitted scores are exact dots
-    * (what is approximate is candidate selection: coarse routing x
-    * signature nomination). `allowed` is the O4 predicate lowered to an
-    * id frame, gated by left-semi join BEFORE the signature scan. */
+    * nearest lists; the probed cluster ids become a STATIC isin filter
+    * (file-listing partition pruning on an [[ivfBqSave]]d layout, same
+    * argument as [[ivfTopK]]); (2) Hamming-nominate `k * oversample`
+    * candidates per query with the XOR+POPCNT kernel over ONLY the
+    * probed lists' (id, sig) columns; (3) rerank the nominees exactly
+    * against their float rows, read from the same pruned lists as
+    * (id, v). Emitted scores are exact dots (what is approximate is
+    * candidate selection: coarse routing x signature nomination).
+    * `allowed` is the O4 predicate lowered to an id frame, gated by
+    * left-semi join BEFORE the signature scan.
+    *
+    * The query frame picks where this runs:
+    *  - DRIVER placement ([[ivfBqProbeOnDriver]]) when the queries are
+    *    already driver-resident and driver-sized — the frame optimizes
+    *    to a `LocalRelation` and its Q x nLists centroid pairs
+    *    (Q x nLists x dim doubles) fit
+    *    `VectorStore.DefaultBroadcastBatchBytes`. Probe selection runs
+    *    with no job; nomination and rerank are one scan job each.
+    *  - DISTRIBUTED placement ([[ivfBqProbeDistributed]]) for every other
+    *    frame: probe selection, nomination and rerank are joins, so a
+    *    query batch of millions of rows never funnels through the
+    *    driver.
+    * Both return the same rows: (qid, rank, id, score), score rounded to
+    * 6 dp; qids must be distinct for the driver placement to apply. */
   def ivfBqTopK(index: IvfBqIndex, queries: DataFrame, qidCol: String, qvecCol: String,
       k: Int, nProbe: Int, oversample: Int = 16,
       allowed: Option[DataFrame] = None): DataFrame = {
     require(oversample >= 1, "oversample must be >= 1")
-    val spark = index.lists.sparkSession
-    import spark.implicits._
-    val cdf = index.centroids.toDF("cluster", "cvec")
     val q = queries.select(col(qidCol).as("qid"), col(qvecCol).as("qv"))
-    val probeW = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("qid")).orderBy(col("cdist").desc, col("cluster"))
-    val probes = q.crossJoin(broadcast(cdf))
-      .withColumn("cdist", cosineD(col("qv"), col("cvec")))
-      .withColumn("rnk", row_number().over(probeW))
-      .filter(col("rnk") <= nProbe)
-      .select(col("qid"),
-        graft.functions.VectorNormalize.normalize(col("qv"), outputFloat = false).as("qvn"),
-        col("cluster"))
-      .withColumn("qsig", graft.functions.BinarySig.signPack(col("qvn")))
-    val probeRows = probes.collect()
-    val probesLocal = spark.createDataFrame(
-      java.util.Arrays.asList(probeRows: _*), probes.schema)
-    val probedClusters = probeRows.map(_.getAs[Int]("cluster")).distinct.toSeq
-    val pruned = index.lists.filter(col("cluster").isin(probedClusters: _*))
-    val gated = allowed match {
-      case Some(a) => pruned.join(
-        a.select(col(a.columns.head).cast(pruned.schema("id").dataType).as("id")),
-        Seq("id"), "left_semi")
-      case None => pruned
+    driverSizedQueries(q, index.centroids) match {
+      case Some(rows) => ivfBqProbeOnDriver(index, q.schema, rows, k, nProbe, oversample, allowed)
+      case None => ivfBqProbeDistributed(index, q, k, nProbe, oversample, allowed)
     }
-    val nominated = gated.select(col("cluster"), col("id"), col("sig"))
-      .join(broadcast(probesLocal.select(col("qid"), col("qsig"), col("cluster"))),
-        Seq("cluster"))
-      .withColumn("__score__",
-        -graft.functions.BinarySig.hammingDist(col("sig"), col("qsig"))
-          .cast(DoubleType))
-      .groupBy(col("qid"))
-      .agg(TopKByScore.topk(col("__score__"), col("id").cast(StringType), k * oversample)
-        .as("hits"))
-      .select(col("qid"), explode(col("hits.id")).as("id"))
-    nominated
-      .join(gated.select(col("id").cast(StringType).as("id"),
-        graft.functions.VectorNormalize.normalize(col("v"), outputFloat = false)
-          .as("__nv__")), Seq("id"))
-      .join(broadcast(probesLocal.select(col("qid"), col("qvn")).dropDuplicates("qid")),
-        Seq("qid"))
-      .withColumn("__score__", dotD(col("__nv__"), col("qvn")))
-      .transform(topKHits(_, "id", k))
   }
 
-  /** Hybrid probe for DataFrame-sized query batches: probe selection
-    * runs distributed (queries × broadcast centroids, top-nProbe per
-    * query), list selection is a STATIC partition filter from the
-    * distinct probed-cluster ids (the only driver-sized artifact —
-    * bounded by nLists, never by Q, same argument as [[ivfTopKBatch]]),
-    * nomination scans only (id, sig) of the pruned lists with the
-    * XOR+POPCNT kernel, and the exact rerank joins the nominees back to
-    * the same pruned scan's float rows. Everything query-sized stays
-    * distributed — a query batch of millions of rows never funnels
-    * through the driver — completing the batch-probe family
-    * (ivf/pq/opq/bq/hybrid). */
-  def ivfBqTopKBatch(index: IvfBqIndex, queries: DataFrame, qidCol: String,
-      qvecCol: String, k: Int, nProbe: Int, oversample: Int = 16,
-      allowed: Option[DataFrame] = None,
-      broadcastProbes: Boolean = true): DataFrame = {
-    require(oversample >= 1, "oversample must be >= 1")
+  /** The (qid, qv) rows of `q` when a probe over them is driver-sized:
+    * the frame is a `LocalRelation` (collecting it runs no job), its
+    * Q x nLists x dim centroid-pair doubles fit the broadcast-batch byte
+    * cap, and its qids are distinct (the distributed plan groups by qid,
+    * so duplicate qids would pool their candidates there). */
+  private def driverSizedQueries(q: DataFrame,
+      centroids: Seq[(Int, Seq[Double])]): Option[Array[Row]] =
+    q.queryExecution.optimizedPlan match {
+      case lr: org.apache.spark.sql.catalyst.plans.logical.LocalRelation =>
+        val dim = centroids.headOption.fold(0)(_._2.size).toLong
+        if (lr.data.size.toLong * centroids.size * dim * 8L >
+            VectorStore.DefaultBroadcastBatchBytes) None
+        else {
+          val rows = q.collect()
+          if (rows.map(_.get(0)).distinct.length == rows.length) Some(rows) else None
+        }
+      case _ => None
+    }
+
+  /** O4 gate shared by both placements: left-semi join on the allowed
+    * ids BEFORE any signature is read. */
+  private def gateAllowed(lists: DataFrame, allowed: Option[DataFrame]): DataFrame =
+    allowed match {
+      case Some(a) => lists.join(
+        a.select(col(a.columns.head).cast(lists.schema("id").dataType).as("id")),
+        Seq("id"), "left_semi")
+      case None => lists
+    }
+
+  /** Distributed placement of [[ivfBqTopK]]: probe selection runs as a
+    * join (queries x broadcast centroids, top-nProbe per query), list
+    * selection is a STATIC partition filter from the distinct
+    * probed-cluster ids (the only driver-sized artifact — bounded by
+    * nLists, never by Q, same argument as [[ivfTopKBatch]]), nomination
+    * scans only (id, sig) of the pruned lists, and the exact rerank
+    * joins the nominees back to the same pruned scan's float rows. */
+  private def ivfBqProbeDistributed(index: IvfBqIndex, q: DataFrame, k: Int,
+      nProbe: Int, oversample: Int, allowed: Option[DataFrame]): DataFrame = {
     val spark = index.lists.sparkSession
     import spark.implicits._
     val cdf = index.centroids.toDF("cluster", "cvec")
-    val q = queries.select(col(qidCol).as("qid"), col(qvecCol).as("qv"))
     val probeW = org.apache.spark.sql.expressions.Window
       .partitionBy(col("qid")).orderBy(col("cdist").desc, col("cluster"))
     // materialize the probe frame once (Q×nProbe rows): it feeds the
@@ -1421,19 +1446,10 @@ object Ann {
     // rerank scan ride the same pruned frame.
     val probedClusters = probes.select(col("cluster")).distinct()
       .collect().map(_.getInt(0)).toSeq
-    val prunedLists = index.lists.filter(col("cluster").isin(probedClusters: _*))
-    // O4 gate before the signature scan, same contract as ivfBqTopK
-    val lists = allowed match {
-      case Some(a) => prunedLists.join(
-        a.select(col(a.columns.head)
-          .cast(index.lists.schema("id").dataType).as("id")),
-        Seq("id"), "left_semi")
-      case None => prunedLists
-    }
-    val bc: DataFrame => DataFrame =
-      if (broadcastProbes) broadcast(_) else identity
+    val lists = gateAllowed(index.lists.filter(col("cluster").isin(probedClusters: _*)),
+      allowed)
     val nominated = lists.select(col("cluster"), col("id"), col("sig"))
-      .join(bc(probes.select(col("qid"), col("qsig"), col("cluster"))), Seq("cluster"))
+      .join(broadcast(probes.select(col("qid"), col("qsig"), col("cluster"))), Seq("cluster"))
       .withColumn("__score__",
         -graft.functions.BinarySig.hammingDist(col("sig"), col("qsig"))
           .cast(DoubleType))
@@ -1445,9 +1461,165 @@ object Ann {
       .join(lists.select(col("id").cast(StringType).as("id"),
         graft.functions.VectorNormalize.normalize(col("v"), outputFloat = false)
           .as("__nv__")), Seq("id"))
-      .join(bc(probes.select(col("qid"), col("qvn")).dropDuplicates("qid")), Seq("qid"))
+      .join(broadcast(probes.select(col("qid"), col("qvn")).dropDuplicates("qid")), Seq("qid"))
       .withColumn("__score__", dotD(col("__nv__"), col("qvn")))
       .transform(topKHits(_, "id", k))
+  }
+
+  /** Driver placement of [[ivfBqTopK]] for driver-resident queries —
+    * the distributed plan's stages with every query-sized step on the
+    * driver, each producing the same values:
+    *  - centroid ranking and the query encodings (`qvn`, `qsig`)
+    *    project the SAME expressions over driver-built
+    *    `LocalRelation`s, which Catalyst folds on the driver (no job;
+    *    the kernels' interpreted and codegen paths run one sequential
+    *    fold, so the values are bitwise those of the distributed plan);
+    *    the window's order — cdist DESC NULLS LAST, cluster ASC — is
+    *    applied in Scala;
+    *  - nomination is ONE job over (id, cluster, sig) of the probed
+    *    dirs, the O4 gate kept, reduced by [[partitionTopK]];
+    *  - rerank is ONE job over (id, v) of the same dirs filtered to the
+    *    nominees, scored by the [[graft.functions.VectorDot]] expression
+    *    against each nominating query's `qvn`, reduced the same way;
+    *  - the result is a `LocalRelation` with the distributed plan's
+    *    columns and types, `round(score, 6)` applied as the same column
+    *    expression. */
+  private def ivfBqProbeOnDriver(index: IvfBqIndex,
+      qSchema: StructType, qRows: Array[Row], k: Int,
+      nProbe: Int, oversample: Int, allowed: Option[DataFrame]): DataFrame = {
+    val spark = index.lists.sparkSession
+    def local(rows: Seq[Row], fields: StructField*): DataFrame =
+      spark.createDataFrame(java.util.Arrays.asList(rows: _*), StructType(fields))
+    val qiField = StructField("qi", IntegerType, nullable = false)
+    val qvField = qSchema("qv")
+    val cdist = local(
+      for ((r, i) <- qRows.toSeq.zipWithIndex; (c, cv) <- index.centroids)
+        yield Row(i, r.get(1), c, cv),
+      qiField, qvField, StructField("cluster", IntegerType, nullable = false),
+      StructField("cvec", ArrayType(DoubleType, containsNull = false), nullable = false))
+      .select(col("qi"), col("cluster"), cosineD(col("qv"), col("cvec")).as("cdist"))
+      .collect()
+    val encoded = local(qRows.toSeq.zipWithIndex.map { case (r, i) => Row(i, r.get(1)) },
+        qiField, qvField)
+      .select(col("qi"),
+        graft.functions.VectorNormalize.normalize(col("qv"), outputFloat = false).as("qvn"))
+      .withColumn("qsig", graft.functions.BinarySig.signPack(col("qvn")))
+      .collect()
+      // a null query vector has no signature: the distributed plan's
+      // null Hamming scores never enter a heap, so it gets no hits
+      .filterNot(_.isNullAt(1))
+      .map(r => r.getInt(0) -> (r.getSeq[Double](1).toArray, r.getSeq[Long](2).toArray))
+      .toMap
+    def closer(a: Row, b: Row): Boolean = {
+      val c = (a.isNullAt(2), b.isNullAt(2)) match {
+        case (false, false) =>
+          val (x, y) = (a.getDouble(2), b.getDouble(2))
+          if (x == y) 0 else java.lang.Double.compare(y, x)
+        case (an, bn) => java.lang.Boolean.compare(an, bn)
+      }
+      if (c != 0) c < 0 else a.getInt(1) < b.getInt(1)
+    }
+    // cluster -> (query, qsig) of every query probing it
+    val probersOf: Map[Int, Array[(Int, Array[Long])]] = cdist.toSeq
+      .groupBy(_.getInt(0)).toSeq
+      .filter { case (qi, _) => encoded.contains(qi) }
+      .flatMap { case (qi, rs) =>
+        rs.sortWith(closer).take(nProbe).map(r => r.getInt(1) -> (qi, encoded(qi)._2)) }
+      .groupBy(_._1).map { case (c, ps) => c -> ps.map(_._2).toArray }
+    val hits =
+      if (probersOf.isEmpty) Map.empty[Int, Array[ScoredId]]
+      else {
+        val pruned = index.lists.filter(col("cluster").isin(probersOf.keys.toSeq.sorted: _*))
+        val nominees = partitionTopK(
+          gateAllowed(pruned, allowed)
+            .select(col("id").cast(StringType).as("id"), col("cluster"), col("sig")),
+          k * oversample) { r =>
+          if (r.isNullAt(2)) Iterator.empty
+          else {
+            val sig = r.getSeq[Long](2)
+            probersOf.getOrElse(r.getInt(1), Array.empty[(Int, Array[Long])]).iterator
+              .map { case (qi, qsig) =>
+                var h = 0
+                var w = 0
+                while (w < math.min(sig.length, qsig.length)) {
+                  h += java.lang.Long.bitCount(sig(w) ^ qsig(w))
+                  w += 1
+                }
+                (qi, -h.toDouble)
+              }
+          }
+        }
+        // nominee id -> nominating queries (with multiplicity, as the
+        // distributed rerank join pairs them)
+        val nominatedBy: Map[String, Seq[Int]] = nominees.toSeq
+          .flatMap { case (qi, es) => es.map(e => e.id.toString -> qi) }
+          .groupBy(_._1).map { case (id, ps) => id -> ps.map(_._2) }
+        if (nominatedBy.isEmpty) Map.empty[Int, Array[ScoredId]]
+        else {
+          val qvn = encoded.map { case (qi, (v, _)) => qi -> v }
+          val dot = graft.functions.VectorDot(
+            BoundReference(0, ArrayType(DoubleType), nullable = true),
+            BoundReference(1, ArrayType(DoubleType), nullable = true))
+          partitionTopK(
+            pruned.select(col("id").cast(StringType).as("id"),
+                graft.functions.VectorNormalize.normalize(col("v"), outputFloat = false).as("nv"))
+              .filter(col("id").isin(nominatedBy.keys.toSeq.sorted: _*)),
+            k) { r =>
+            if (r.isNullAt(1)) Iterator.empty
+            else {
+              val nv = ArrayData.toArrayData(r.getSeq[Double](1).toArray)
+              nominatedBy(r.getString(0)).iterator.flatMap { qi =>
+                Option(dot.eval(InternalRow(nv, ArrayData.toArrayData(qvn(qi)))))
+                  .map(s => (qi, s.asInstanceOf[Double]))
+              }
+            }
+          }
+        }
+      }
+    local(
+      qRows.toSeq.zipWithIndex.flatMap { case (r, qi) =>
+        hits.getOrElse(qi, Array.empty[ScoredId]).toSeq.zipWithIndex
+          .map { case (e, rank0) => Row(r.get(0), rank0 + 1, e.id.toString, e.score) }
+      },
+      qSchema("qid"), StructField("rank", IntegerType, nullable = false),
+      StructField("id", StringType, nullable = false),
+      StructField("__score__", DoubleType, nullable = false))
+      .select(col("qid"), col("rank"), col("id"), round(col("__score__"), 6).as("score"))
+  }
+
+  /** ONE Spark job: each partition of `rows` (a STRING id first) keeps a
+    * [[TopKByScore]]-ordered heap of `k` per query over the (query,
+    * score) pairs `score` emits for a row, and the driver merges the
+    * per-partition heaps — the aggregate's partial/merge split with the
+    * merge on the driver, so no shuffle stage runs. As in the aggregate,
+    * null ids and NaN scores never enter a heap. Returns each query's
+    * candidates best-first. */
+  private def partitionTopK(rows: DataFrame, k: Int)(
+      score: Row => Iterator[(Int, Double)])
+      : Map[Int, Array[ScoredId]] = {
+    import org.apache.spark.unsafe.types.UTF8String
+    import scala.collection.mutable
+    val spark = rows.sparkSession
+    import spark.implicits._
+    val parts = rows.mapPartitions { it =>
+      val heaps = mutable.HashMap.empty[Int, mutable.PriorityQueue[ScoredId]]
+      it.foreach { r =>
+        if (!r.isNullAt(0)) {
+          val id = UTF8String.fromString(r.getString(0))
+          score(r).foreach { case (qi, s) =>
+            if (!s.isNaN)
+              TopKByScore.offer(heaps.getOrElseUpdate(qi, TopKByScore.emptyHeap()), ScoredId(s, id), k)
+          }
+        }
+      }
+      heaps.iterator.flatMap { case (qi, h) => h.iterator.map(e => (qi, e.score, e.id.toString)) }
+    }.collect()
+    val merged = mutable.HashMap.empty[Int, mutable.PriorityQueue[ScoredId]]
+    parts.foreach { case (qi, s, id) =>
+      TopKByScore.offer(merged.getOrElseUpdate(qi, TopKByScore.emptyHeap()),
+        ScoredId(s, UTF8String.fromString(id)), k)
+    }
+    merged.map { case (qi, h) => qi -> TopKByScore.bestFirst(h) }.toMap
   }
 
   /** Skew-triggered maintenance for a PERSISTED hybrid layout — the
@@ -1479,14 +1651,9 @@ object Ann {
   }
 
   /** Load a persisted hybrid index (cold start, no refit/re-encode). */
-  def ivfBqLoad(spark: org.apache.spark.sql.SparkSession, path: String): IvfBqIndex = {
-    val lists = spark.read.parquet(s"$path/lists")
-    val centroids = spark.read.json(s"$path/centroids")
-      .select(col("cluster").cast("int"), col("cvec"))
-      .collect()
-      .map(r => (r.getInt(0), r.getSeq[Double](1).toSeq)).toSeq
-    IvfBqIndex(centroids, lists)
-  }
+  def ivfBqLoad(spark: org.apache.spark.sql.SparkSession, path: String): IvfBqIndex =
+    IvfBqIndex(readClusterSidecar(spark, s"$path/centroids"),
+      spark.read.parquet(s"$path/lists"))
 
   /** Append a batch to a PERSISTED hybrid layout at cost ∝ batch: assign
     * against the existing centroid sidecar (no KMeans fit), sign-encode
@@ -1504,9 +1671,7 @@ object Ann {
     * [[ivfStageAppend]] for why the split exists. */
   private[graft] def ivfBqStageAppend(spark: org.apache.spark.sql.SparkSession,
       path: String, batch: DataFrame, idCol: String, vecCol: String): (DataFrame, Seq[Int]) = {
-    val centroids = spark.read.json(s"$path/centroids")
-      .select(col("cluster").cast(IntegerType), col("cvec"))
-      .collect().map(r => (r.getInt(0), r.getSeq[Double](1).toSeq)).toSeq
+    val centroids = readClusterSidecar(spark, s"$path/centroids")
     val listsSchema = layoutSchema(spark, s"$path/lists")
     val assignedBatch = batch
       .select(col(idCol).cast(listsSchema("id").dataType).as("id"),
@@ -1598,10 +1763,7 @@ object Ann {
   def ivfPqLoad(spark: org.apache.spark.sql.SparkSession, path: String): IvfPqIndex = {
     val ivf = ivfLoad(spark, s"$path/ivf")
     val codes = spark.read.parquet(s"$path/codes")
-    val centNorm = spark.read.json(s"$path/centnorm")
-      .select(col("cluster").cast(IntegerType), col("cn"))
-      .collect().map(r => (r.getInt(0), r.getSeq[Double](1).toSeq)).toSeq
-      .sortBy(_._1)
+    val centNorm = readClusterSidecar(spark, s"$path/centnorm", "cn").sortBy(_._1)
     val books = readCodebooks(spark, s"$path/codebooks")
     IvfPqIndex(ivf, books.size, books.head.head.size, centNorm, books, codes)
   }
@@ -1818,9 +1980,7 @@ object Ann {
     * (localCheckpoint), so the later write re-reads nothing. */
   private[graft] def ivfStageAppend(spark: org.apache.spark.sql.SparkSession,
       path: String, batch: DataFrame, idCol: String, vecCol: String): (DataFrame, Seq[Int]) = {
-    val centroids = spark.read.json(s"$path/centroids")
-      .select(col("cluster").cast(IntegerType), col("cvec"))
-      .collect().map(r => (r.getInt(0), r.getSeq[Double](1).toSeq)).toSeq
+    val centroids = readClusterSidecar(spark, s"$path/centroids")
     val listsSchema = layoutSchema(spark, s"$path/lists")
     val assignedBatch = batch
       .select(col(idCol).cast(listsSchema("id").dataType).as("id"),
@@ -1994,9 +2154,7 @@ object Ann {
         val subDim = books.head.head.size
         // centnorm: kept ids keep their stored normalization verbatim;
         // parents (sub-0 vector changed) and tails renormalize
-        val oldCn = spark.read.json(s"$path/centnorm")
-          .select(col("cluster").cast(IntegerType), col("cn"))
-          .collect().map(r => (r.getInt(0), r.getSeq[Double](1).toSeq)).toMap
+        val oldCn = readClusterSidecar(spark, s"$path/centnorm", "cn").toMap
         val newCn = plan.centroids.map { case (cid, cvec) =>
           if (cid < oldCount && !plan.parents.contains(cid)) (cid, oldCn(cid))
           else {
@@ -2205,12 +2363,8 @@ object Ann {
   def ivfPqAppendSave(spark: org.apache.spark.sql.SparkSession, path: String,
       batch: DataFrame, idCol: String, vecCol: String): Seq[Int] = {
     import spark.implicits._
-    val centroids = spark.read.json(s"$path/ivf/centroids")
-      .select(col("cluster").cast(IntegerType), col("cvec"))
-      .collect().map(r => (r.getInt(0), r.getSeq[Double](1).toSeq)).toSeq
-    val centNorm = spark.read.json(s"$path/centnorm")
-      .select(col("cluster").cast(IntegerType), col("cn"))
-      .collect().map(r => (r.getInt(0), r.getSeq[Double](1).toSeq)).toSeq
+    val centroids = readClusterSidecar(spark, s"$path/ivf/centroids")
+    val centNorm = readClusterSidecar(spark, s"$path/centnorm", "cn")
     val books = readCodebooks(spark, s"$path/codebooks")
     val subDim = books.head.head.size
     val codesSchema = layoutSchema(spark, s"$path/codes")
@@ -2289,9 +2443,7 @@ object Ann {
     import spark.implicits._
     require(minFactor > 1.0, s"minFactor must be > 1, got $minFactor")
     recoverMaintain(spark, path)
-    val centroids = spark.read.json(s"$path/centroids")
-      .select(col("cluster").cast(IntegerType), col("cvec"))
-      .collect().map(r => (r.getInt(0), r.getSeq[Double](1).toSeq)).toSeq.sortBy(_._1)
+    val centroids = readClusterSidecar(spark, s"$path/centroids").sortBy(_._1)
     val listsSchema = layoutSchema(spark, s"$path/lists")
     val sizes = spark.read.parquet(s"$path/lists")
       .groupBy(col("cluster").cast(IntegerType).as("cluster"))
@@ -2353,12 +2505,8 @@ object Ann {
     import spark.implicits._
     require(minFactor > 1.0, s"minFactor must be > 1, got $minFactor")
     recoverMaintain(spark, path)
-    val centroids = spark.read.json(s"$path/ivf/centroids")
-      .select(col("cluster").cast(IntegerType), col("cvec"))
-      .collect().map(r => (r.getInt(0), r.getSeq[Double](1).toSeq)).toSeq.sortBy(_._1)
-    val centNorm = spark.read.json(s"$path/centnorm")
-      .select(col("cluster").cast(IntegerType), col("cn"))
-      .collect().map(r => (r.getInt(0), r.getSeq[Double](1).toSeq)).toSeq.sortBy(_._1)
+    val centroids = readClusterSidecar(spark, s"$path/ivf/centroids").sortBy(_._1)
+    val centNorm = readClusterSidecar(spark, s"$path/centnorm", "cn").sortBy(_._1)
     val books = readCodebooks(spark, s"$path/codebooks")
     val subDim = books.head.head.size
     val codesSchema = layoutSchema(spark, s"$path/codes")
@@ -2550,16 +2698,6 @@ object Ann {
     compactDirs(spark, s"$path/lists", maxFiles)
   }
 
-  /** Compact a persisted residual IVF×PQ layout ([[ivfPqSave]]): both
-    * cluster-partitioned halves (codes + coarse lists) repay their
-    * append debt together. */
-  def ivfPqCompactSave(spark: org.apache.spark.sql.SparkSession, path: String,
-      maxFiles: Int = 8): Seq[String] = {
-    recoverMaintain(spark, path)
-    (compactDirs(spark, s"$path/codes", maxFiles) ++
-      compactDirs(spark, s"$path/ivf/lists", maxFiles)).distinct.sorted
-  }
-
   /** Sweep crash residue left by an interrupted [[compactDirs]] or
     * [[rewritePartitionDir]] swap under `root`. A `.…tmp` staging dir
     * is always droppable (the original partition dir is intact until
@@ -2632,6 +2770,16 @@ object Ann {
       fs.delete(old, true)
     }
   }
+
+  /** Distinct rows of a small key projection. A frame that optimizes
+    * to a `LocalRelation` (a projection over driver-resident rows folds
+    * on the driver) is collected — no job — and deduplicated on the
+    * driver; any other frame keeps the distributed `distinct`. */
+  private[graft] def distinctRows(df: DataFrame): Array[Row] =
+    df.queryExecution.optimizedPlan match {
+      case _: org.apache.spark.sql.catalyst.plans.logical.LocalRelation => df.collect().distinct
+      case _ => df.distinct().collect()
+    }
 
   /** Normalize a caller-supplied id frame (first column = the ids) to a
     * single distinct string `id` column, materialized once

@@ -1593,8 +1593,8 @@ object InvertedIndex {
     // index's own tokenization, so index-time and query-time can never
     // silently disagree (under `fold` a raw term may split)
     val terms = queryTerms.flatMap(TextAnalysis.tokensOf(_, st.analyzer)).distinct
-    val buckets = terms.toDF("term").select(termBucket(st.nBuckets).as("b"))
-      .distinct().collect().map(_.getLong(0)).toSeq.sorted
+    val buckets = Ann.distinctRows(terms.toDF("term").select(termBucket(st.nBuckets).as("b")))
+      .map(_.getLong(0)).toSeq.sorted
     // list ONLY the probed bucket directories (explicit paths with
     // basePath, not a root read + filter): a root read's partition
     // discovery lists every bucket directory — O(nBuckets) RPCs and, past
@@ -1892,8 +1892,8 @@ object InvertedIndex {
     // set drives the probe (same analyzer contract as every probe)
     val ordered = queryTerms.flatMap(TextAnalysis.tokensOf(_, st.analyzer))
     val terms = ordered.distinct
-    val buckets = terms.toDF("term").select(termBucket(st.nBuckets).as("b"))
-      .distinct().collect().map(_.getLong(0)).toSeq.sorted
+    val buckets = Ann.distinctRows(terms.toDF("term").select(termBucket(st.nBuckets).as("b")))
+      .map(_.getLong(0)).toSeq.sorted
     val bucketDirs = probedBucketDirs(spark, path, buckets)
     if (bucketDirs.isEmpty) {
       return Seq.empty[(String, Double, Double, Long)]
@@ -2283,8 +2283,8 @@ object InvertedIndex {
       .toDF("id", "snip_no", "n_hits", "terms_hit", "win_start", "win_end", "snippet")
     val ids = docs.select(col(docs.columns.head).cast(StringType).as("id"))
       .distinct().localCheckpoint(true)
-    val buckets = terms.toDF("term").select(termBucket(st.nBuckets).as("b"))
-      .distinct().collect().map(_.getLong(0)).toSeq.sorted
+    val buckets = Ann.distinctRows(terms.toDF("term").select(termBucket(st.nBuckets).as("b")))
+      .map(_.getLong(0)).toSeq.sorted
     val bucketDirs = probedBucketDirs(spark, path, buckets)
     if (bucketDirs.isEmpty) return empty
     val pruned = spark.read.option("basePath", s"$path/postings")
@@ -2647,43 +2647,6 @@ object InvertedIndex {
       .filter(col("term").startsWith(ps.head))
       .orderBy(col("df").desc, col("term"))
       .limit(k)
-  }
-
-  /** [[suggestTerms]] for a query BATCH — prefixes as a DATA column,
-    * nothing query-sized through the driver: the vocab-sized dictionary
-    * joins the broadcast prefix frame on the startsWith theta predicate
-    * (a prefix cannot hash-prune, so vocab × |batch| comparisons in ONE
-    * pass is the honest plan), and the bounded-heap
-    * [[graft.functions.TopKByScore]] reduces to k rows per query — df
-    * DESC, term ASC ties, exactly [[suggestTerms]]' order. Prefixes
-    * fold through the sidecar's analyzer in-plan; a prefix that
-    * analyzes to more than one token has no single-token dictionary
-    * contract, and the batch FAILS FAST on it (bounded probe — no
-    * silent drops). Emits (qid, rank, term, df). */
-  def suggestTermsBatch(spark: SparkSession, path: String,
-      queries: DataFrame, qidCol: String, prefixCol: String,
-      k: Int): DataFrame = {
-    require(k >= 1, s"k must be >= 1, got $k")
-    val st = readStats(spark, path)
-    import spark.implicits._
-    val q = queries.select(col(qidCol).cast(StringType).as("qid"),
-      TextAnalysis.tokens(col(prefixCol).cast(StringType), st.analyzer)
-        .as("__toks__"))
-    val dirty = q.filter(size(col("__toks__")) =!= 1)
-      .select(col("qid")).limit(5).collect().map(_.getString(0))
-    require(dirty.isEmpty,
-      s"prefix(es) of ${dirty.mkString("[", ", ", "]")} analyze to more " +
-        s"than one token under the index's '${st.analyzer}' analyzer — " +
-        "a prefix must be a single token")
-    val p = q.select(col("qid"), element_at(col("__toks__"), 1).as("__p__"))
-    termDictionary(spark, path)
-      .join(broadcast(p), col("term").startsWith(col("__p__")))
-      .groupBy(col("qid"))
-      .agg(graft.functions.TopKByScore.topk(
-        col("df").cast(DoubleType), col("term"), k).as("hits"))
-      .select(col("qid"), posexplode(col("hits")).as(Seq("rank0", "hit")))
-      .select(col("qid"), (col("rank0") + 1).cast(IntegerType).as("rank"),
-        col("hit.id").as("term"), col("hit.score").cast(LongType).as("df"))
   }
 
   /** "DID YOU MEAN" spell correction: the k best dictionary corrections
@@ -3443,6 +3406,12 @@ object InvertedIndex {
     val touched = tombsOpt match {
       case None => Seq.empty[Long]
       case Some(tombs) =>
+        // Reading the stats before the emptiness check adds no failure
+        // mode: a tombstones dir is only ever written by `delete`, after
+        // its own stats read succeeded, and this entry already read the
+        // stats unconditionally in `reconcileTermDeltas` above — an index
+        // without a readable stats sidecar fails compact loudly either
+        // way (spec-pinned), never no-ops over a half-built index.
         val st = readStats(spark, path)
         val hasTbCol = tombs.columns.contains("tbuckets")
         // ONE read job over the checkpointed set answers the three

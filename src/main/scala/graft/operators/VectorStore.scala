@@ -234,8 +234,6 @@ final case class VectorStore(
   /** Record count (lib.rs:306-308). */
   def len(): Long = df.count()
   def isEmpty: Boolean = df.isEmpty
-  /** Total stored vector elements = N * dim (lib.rs:314-318). */
-  def vectorElemCount(): Long = len() * embeddingDim
 
   // ------------------------------------------------------------------- O8
   /** Persist natively: partitioned parquet + a small JSON sidecar carrying
@@ -330,8 +328,22 @@ object VectorStore {
       writeSidecar(store.df.sparkSession, s"$path/_meta.json", meta)
     }
 
+    /** Heal crash residue of an interrupted [[compact]] swap
+      * ([[Ann.recoverStagedDirs]]) before the layout is read or
+      * rewritten: between compaction's rename-away and rename-in the
+      * bucket dir is missing and its `.old` copy holds the only rows.
+      * Unhealed, an upsert would write a fresh dir holding only the
+      * batch (and the next compact would then drop the `.old` copy as a
+      * leftover), and a delete would miss the rows that a later heal
+      * restores. One root listing. */
+    private[graft] def heal(spark: SparkSession, path: String): Unit = {
+      val data = new org.apache.hadoop.fs.Path(s"$path/data")
+      Ann.recoverStagedDirs(data.getFileSystem(spark.sparkContext.hadoopConfiguration), data)
+    }
+
     /** Open the bucketed layout as a plain store (bucket column dropped). */
     def load(spark: SparkSession, path: String): VectorStore = {
+      heal(spark, path)
       val meta = readMeta(spark, s"$path/_meta.json")
       VectorStore(spark.read.parquet(s"$path/data").drop(BucketCol),
         meta.embeddingDim, meta.metric, meta.additionalData - "nBuckets")
@@ -342,6 +354,7 @@ object VectorStore {
       * existing ids get the new normalized vector and KEEP their old
       * metadata; new ids are appended whole. */
     def upsert(spark: SparkSession, path: String, batch: DataFrame): Unit = {
+      heal(spark, path)
       val meta = readMeta(spark, s"$path/_meta.json")
       val nBuckets = meta.additionalData("nBuckets").asInt()
       val full = spark.read.parquet(s"$path/data")
@@ -350,7 +363,7 @@ object VectorStore {
         .withColumn(BucketCol, bucketOf(nBuckets))
       // the touched-bucket list is tiny (<= batch size ids), so collect it
       // and prune the base read to those partition directories
-      val touched = b.select(BucketCol).distinct().collect().map(_.getLong(0)).toSeq
+      val touched = Ann.distinctRows(b.select(BucketCol)).map(_.getLong(0)).toSeq
       val base = full.filter(col(BucketCol).isin(touched: _*))
       val newVecs = b.select(col(IdCol), col(VectorCol).as("__newvec__"))
       val updated = base
@@ -391,12 +404,13 @@ object VectorStore {
       * there is the plan-visible partition-prune witness, not an id
       * list). */
     def delete(spark: SparkSession, path: String, ids: DataFrame): Unit = {
+      heal(spark, path)
       val meta = readMeta(spark, s"$path/_meta.json")
       val nBuckets = meta.additionalData("nBuckets").asInt()
       val (idDf0, n) = Ann.stageIdFrame(ids)
       if (n == 0L) return
       val idDf = idDf0.select(col("id").as(IdCol)).withColumn(BucketCol, bucketOf(nBuckets))
-      val touched = idDf.select(BucketCol).distinct().collect().map(_.getLong(0)).toSeq
+      val touched = Ann.distinctRows(idDf.select(BucketCol)).map(_.getLong(0)).toSeq
       val base = spark.read.parquet(s"$path/data")
         .filter(col(BucketCol).isin(touched: _*))
       val remaining = base

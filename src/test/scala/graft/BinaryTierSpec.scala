@@ -149,14 +149,15 @@ class BinaryTierSpec extends AnyFunSuite {
       k = 5, nProbe = 4, oversample = n / 5 + 1)
     val brute = Ann.bruteForceTopK(e, "vec_id", "embedding", q, "vec_id", "embedding", k = 5)
     assert(full.exceptAll(brute).isEmpty && brute.exceptAll(full).isEmpty)
-    // the collect-free batch twin selects the same probes (same
-    // deterministic (cosine desc, cluster) ranking) => row-identical
-    // at ANY operating point, not just the degenerate one
-    val opCollect = Ann.ivfBqTopK(hy, q, "vec_id", "embedding",
+    // the driver placement (same queries, collected) selects the same
+    // probes as the distributed one (same deterministic (cosine desc,
+    // cluster) ranking) => row-identical at ANY operating point, not
+    // just the degenerate one
+    val opDriver = Ann.ivfBqTopK(hy, SparkEntry.driverFrame(q), "vec_id", "embedding",
       k = 5, nProbe = 2, oversample = 4)
-    val opBatch = Ann.ivfBqTopKBatch(hy, q, "vec_id", "embedding",
+    val opDist = Ann.ivfBqTopK(hy, q, "vec_id", "embedding",
       k = 5, nProbe = 2, oversample = 4)
-    assert(opBatch.exceptAll(opCollect).isEmpty && opCollect.exceptAll(opBatch).isEmpty)
+    assert(opDist.exceptAll(opDriver).isEmpty && opDriver.exceptAll(opDist).isEmpty)
 
     // persisted lifecycle: append touches only the batch's cluster dirs,
     // delete rewrites only the dirs holding the ids

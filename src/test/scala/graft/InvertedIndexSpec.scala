@@ -32,6 +32,23 @@ class InvertedIndexSpec extends AnyFunSuite {
       assert(math.abs(a - b) < 2e-6, s"score drift: $a vs $b") }
   }
 
+  test("no tombstones without a stats sidecar: delete and compact fail loudly without one") {
+    // compact reads the stats before its tombstone-emptiness check; that
+    // is safe because tombstones are only written by a delete whose own
+    // stats read succeeded, and compact needs the stats at entry anyway
+    val path = tmp("nostats")
+    InvertedIndex.build(docs.filter(col("doc_id") < 20), "doc_id", "text", path,
+      nBuckets = 4, nDocBuckets = 2)
+    val stats = new java.io.File(s"$path/_stats")
+    assert(stats.isDirectory)
+    stats.listFiles().foreach(_.delete())
+    assert(stats.delete())
+    intercept[IllegalArgumentException](InvertedIndex.delete(spark, path, Seq("1", "2")))
+    assert(!new java.io.File(s"$path/tombstones").exists,
+      "a delete that cannot read the stats must write no tombstone")
+    intercept[IllegalArgumentException](InvertedIndex.compact(spark, path))
+  }
+
   test("append equals a fresh rebuild; stats stay exact") {
     val grown = tmp("grow"); val rebuilt = tmp("rebuild")
     InvertedIndex.build(docs.filter(col("doc_id") < 30), "doc_id", "text",

@@ -224,77 +224,109 @@ class PlanShapeSpec extends AnyFunSuite {
     assert(q.count() > 0)
   }
 
-  test("ivfBq hybrid probe: cluster partition pruning + sig-only nomination scan") {
+  /** A persisted 8-list IVF×BQ layout over the sf embeddings, two
+    * probe queries as a frame that is NOT driver-resident (distributed
+    * placement) and the same queries collected (driver placement). */
+  private lazy val ivfBqFixture = {
     import org.apache.spark.sql.functions.col
     val e = Tables.embeddings(spark, TestSpark.sf).select(col("vec_id"), col("embedding"))
     val path = java.nio.file.Files.createTempDirectory("graft_ivfbq_plan").toString
     graft.operators.Ann.ivfBqSave(graft.operators.Ann.ivfBqBuild(
       graft.operators.Ann.ivfBuild(e, "vec_id", "embedding", nLists = 8)), path)
-    val idx = graft.operators.Ann.ivfBqLoad(spark, path)
     val q = e.filter(col("vec_id") < 2)
-    val df = graft.operators.Ann.ivfBqTopK(idx, q, "vec_id", "embedding",
+    (graft.operators.Ann.ivfBqLoad(spark, path), q, SparkEntry.driverFrame(q))
+  }
+
+  private def ivfBqProbe(q: org.apache.spark.sql.DataFrame) =
+    graft.operators.Ann.ivfBqTopK(ivfBqFixture._1, q, "vec_id", "embedding",
       k = 3, nProbe = 2, oversample = 4)
-    // AQE wraps the tree, so match the FileScan LINES of the plan text
-    val listScans = df.queryExecution.executedPlan.toString
-      .split("== Initial Plan ==").head
-      .linesIterator.filter(l => l.contains("FileScan parquet") && l.contains("lists"))
-      .toSeq
-    assert(listScans.nonEmpty, "probe must scan the persisted lists")
-    // every scan of the lists table is pruned to the probed clusters
-    // (static isin from the collected probe table -> file-listing-time
-    // partition pruning, the ivfTopK discipline)
-    assert(listScans.forall(s =>
-      s.contains("PartitionFilters") && s.contains("cluster#")),
-      s"lists scans must carry cluster partition filters:\n${listScans.mkString("\n")}")
-    // the nomination pass reads (id, sig) WITHOUT the float vectors:
-    // parquet column pruning is what turns 100 TB of f32 into the ~3 TB
-    // signature read
-    def readSchema(s: String): String =
-      s.drop(s.indexOf("ReadSchema:"))
-    assert(listScans.exists(s =>
-      readSchema(s).contains("sig") && !readSchema(s).contains("v:")),
-      s"one lists scan must project signatures only:\n${listScans.mkString("\n")}")
+
+  /** FileScan lines over the persisted lists in a final executed plan
+    * (AQE wraps the tree, so match the plan text above its initial
+    * plan). */
+  private def listScans(executedPlan: String): Seq[String] =
+    executedPlan.split("== Initial Plan ==").head
+      .linesIterator.filter(l => l.contains("FileScan parquet") && l.contains("lists")).toSeq
+
+  /** The lists scans of every job the driver placement runs, captured
+    * from the executed plans a QueryExecutionListener sees. */
+  private def driverPlacementScans(): Seq[String] = {
+    import org.apache.spark.sql.execution.QueryExecution
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(fn: String, qe: QueryExecution, ns: Long): Unit =
+        plans.add(qe.executedPlan.toString)
+      override def onFailure(fn: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    val (_, _, ql) = ivfBqFixture
+    org.apache.spark.GraftTestBridge.drainListeners(spark.sparkContext)
+    spark.listenerManager.register(listener)
+    try {
+      assert(ivfBqProbe(ql).collect().nonEmpty)
+      org.apache.spark.GraftTestBridge.drainListeners(spark.sparkContext)
+    } finally spark.listenerManager.unregister(listener)
+    plans.toArray(new Array[String](0)).toSeq.flatMap(listScans)
+  }
+
+  private def readSchema(s: String): String = s.drop(s.indexOf("ReadSchema:"))
+
+  private def partFilters(s: String): String = {
+    val tag = "PartitionFilters: ["
+    val i = s.indexOf(tag)
+    if (i < 0) "" else { val rest = s.drop(i + tag.length); rest.take(rest.indexOf("]")) }
+  }
+
+  test("ivfBq hybrid probe: cluster partition pruning + sig-only nomination scan") {
+    // both placements: the distributed plan of a frame that is not
+    // driver-resident, and the jobs the driver placement runs
+    val df = ivfBqProbe(ivfBqFixture._2)
+    for ((placement, scans) <- Seq(
+        "distributed" -> listScans(df.queryExecution.executedPlan.toString),
+        "driver" -> driverPlacementScans())) {
+      assert(scans.nonEmpty, s"$placement probe must scan the persisted lists")
+      // every scan of the lists table is pruned to the probed clusters
+      // (static isin from the probe table -> file-listing-time
+      // partition pruning, the ivfTopK discipline)
+      assert(scans.forall(s =>
+        s.contains("PartitionFilters") && s.contains("cluster#")),
+        s"$placement lists scans must carry cluster partition filters:\n${scans.mkString("\n")}")
+      // the nomination pass reads (id, sig) WITHOUT the float vectors:
+      // parquet column pruning is what turns 100 TB of f32 into the ~3 TB
+      // signature read
+      assert(scans.exists(s =>
+        readSchema(s).contains("sig") && !readSchema(s).contains("v:")),
+        s"one $placement lists scan must project signatures only:\n${scans.mkString("\n")}")
+    }
     // and the plan stays correct end to end
     assert(df.count() > 0)
   }
 
   test("ivfBq BATCH probe: rerank scan stays cluster-pruned (no full-table (id,v) read)") {
-    import org.apache.spark.sql.functions.col
-    val e = Tables.embeddings(spark, TestSpark.sf).select(col("vec_id"), col("embedding"))
-    val path = java.nio.file.Files.createTempDirectory("graft_ivfbqb_plan").toString
-    graft.operators.Ann.ivfBqSave(graft.operators.Ann.ivfBqBuild(
-      graft.operators.Ann.ivfBuild(e, "vec_id", "embedding", nLists = 8)), path)
-    val idx = graft.operators.Ann.ivfBqLoad(spark, path)
-    val q = e.filter(col("vec_id") < 2)
-    val df = graft.operators.Ann.ivfBqTopKBatch(idx, q, "vec_id", "embedding",
-      k = 3, nProbe = 2, oversample = 4)
+    val df = ivfBqProbe(ivfBqFixture._2)
     assert(df.count() > 0)
     // after execution, the adaptive plan is final: every scan of the
     // persisted lists that reads the FLOAT vectors (the rerank side)
     // must carry a cluster partition filter — the round-9 advisor
-    // finding was exactly this scan reading every cluster directory
-    val plan = df.queryExecution.executedPlan.toString
-      .split("== Initial Plan ==").head
-    val listScans = plan.linesIterator
-      .filter(l => l.contains("FileScan parquet") && l.contains("lists")).toSeq
-    def readSchema(s: String): String = s.drop(s.indexOf("ReadSchema:"))
-    val rerankScans = listScans.filter(s => readSchema(s).contains("v:"))
-    assert(rerankScans.nonEmpty, s"batch probe must have a float rerank scan:\n$plan")
-    def partFilters(s: String): String = {
-      val tag = "PartitionFilters: ["
-      val i = s.indexOf(tag)
-      if (i < 0) "" else { val rest = s.drop(i + tag.length); rest.take(rest.indexOf("]")) }
+    // finding was exactly this scan reading every cluster directory.
+    // Checked on the distributed placement and on the driver
+    // placement's rerank job alike.
+    for ((placement, scans) <- Seq(
+        "distributed" -> listScans(df.queryExecution.executedPlan.toString),
+        "driver" -> driverPlacementScans())) {
+      val rerankScans = scans.filter(s => readSchema(s).contains("v:"))
+      assert(rerankScans.nonEmpty,
+        s"$placement probe must have a float rerank scan:\n${scans.mkString("\n")}")
+      // the static probed-cluster isin must land INSIDE PartitionFilters
+      // (file-listing-time pruning), not as a post-scan data filter
+      assert(rerankScans.forall(s => partFilters(s).contains("cluster#")),
+        s"$placement rerank scans must keep static cluster pruning:\n" +
+          rerankScans.mkString("\n"))
+      // and the nomination scan (sig, no v) is pruned the same way
+      val nomScans = scans.filter(s =>
+        readSchema(s).contains("sig") && !readSchema(s).contains("v:"))
+      assert(nomScans.nonEmpty && nomScans.forall(s => partFilters(s).contains("cluster#")),
+        s"$placement nomination scans must be cluster-pruned:\n${scans.mkString("\n")}")
     }
-    // the static probed-cluster isin must land INSIDE PartitionFilters
-    // (file-listing-time pruning), not as a post-scan data filter
-    assert(rerankScans.forall(s => partFilters(s).contains("cluster#")),
-      "rerank scans must keep static cluster pruning:\n" +
-        rerankScans.mkString("\n"))
-    // and the nomination scan (sig, no v) is pruned the same way
-    val nomScans = listScans.filter(s =>
-      readSchema(s).contains("sig") && !readSchema(s).contains("v:"))
-    assert(nomScans.nonEmpty && nomScans.forall(s => partFilters(s).contains("cluster#")),
-      s"nomination scans must be cluster-pruned:\n${listScans.mkString("\n")}")
   }
 
   test("mltQueries: the seed semi-join gates the corpus BELOW the rank window") {

@@ -1009,6 +1009,56 @@ class VectorStoreSpec extends AnyFunSuite {
       "post-recovery delete must act on the restored full corpus")
   }
 
+  test("partitioned store heals a compaction crash before upsert, delete and load") {
+    import java.nio.file.Files
+    val n = 64
+    val rows = (0 until n).map(i => (i.toString, Seq(i + 1f, 1f, 0f, 0f), s"c$i"))
+    val st = mkStore(rows)
+    val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
+    val bucketOf = st.df.select(col("__id__"),
+        VectorStore.Partitioned.bucketOf(8).as("b"))
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    val victim = bucketOf("3")
+    val victimIds = bucketOf.collect { case (id, b) if b == victim => id }.toSet
+    // the crash window of Ann.compactDirs: the bucket dir renamed away
+    // to `.old`, the compacted copy never renamed in
+    def crashedLayout(): String = {
+      val dir = Files.createTempDirectory("pcrash").toString
+      VectorStore.Partitioned.init(st, dir, nBuckets = 8)
+      require(fs.rename(new org.apache.hadoop.fs.Path(s"$dir/data/__bucket__=$victim"),
+        new org.apache.hadoop.fs.Path(s"$dir/data/.__bucket__=$victim.compact.old")))
+      dir
+    }
+    def ids(dir: String): Set[String] =
+      VectorStore.Partitioned.load(spark, dir).df.select("__id__")
+        .collect().map(_.getString(0)).toSet
+    // upsert into the crashed bucket: the original rows must survive it
+    // and the compaction that follows
+    val up = crashedLayout()
+    val batch = Seq(("3", Seq(0f, 0f, 1f, 0f), "NEW")).toDF("id", "vec", "color")
+      .select(col("id").as("__id__"), col("vec").cast(ArrayType(FloatType)).as("vector"),
+        col("color"))
+    VectorStore.Partitioned.upsert(spark, up, batch)
+    VectorStore.Partitioned.compact(spark, up, maxFiles = 1)
+    assert(!new java.io.File(s"$up/data/.__bucket__=$victim.compact.old").exists)
+    assert(ids(up) == rows.map(_._1).toSet, "an upsert must not drop the crashed bucket's rows")
+    val three = VectorStore.Partitioned.load(spark, up).df
+      .filter(col("__id__") === "3").select("color", "vector").head()
+    assert(three.getString(0) == "c3" && three.getSeq[Float](1) == Seq(0f, 0f, 1f, 0f))
+    // delete from the crashed bucket: the delete must land on the
+    // restored rows, not be undone when the `.old` copy comes back
+    val del = crashedLayout()
+    val gone = (victimIds - "3").take(1).toSeq :+ "3"
+    VectorStore.Partitioned.delete(spark, del, gone)
+    VectorStore.Partitioned.compact(spark, del, maxFiles = 1)
+    assert(ids(del) == rows.map(_._1).toSet -- gone, "a delete must not be lost to the crash")
+    // a plain load heals too: the crashed bucket reads back whole
+    val ld = crashedLayout()
+    assert(ids(ld) == rows.map(_._1).toSet)
+    assert(graft.operators.MatrixStore.fromPartitionedLayout(spark, crashedLayout())
+      .query(Array(1f, 1f, 0f, 0f), n).map(_._1).toSet == rows.map(_._1).toSet)
+  }
+
   test("ingest streams repay their own small-file debt on the compact cadence") {
     import java.nio.file.Files
     import scala.jdk.CollectionConverters._

@@ -35,7 +35,8 @@ object HybridProfile {
     val lists = built.lists.cache(); lists.count()
     val hy = built.copy(lists = lists)
     println(f"[hybrid] build ${(System.nanoTime() - t0) / 1e9}%.2f s")
-    val q1 = corpus.filter(col("__id__") === "0").select(col("__id__"), col("vector"))
+    val q1 = graft.SparkEntry.driverFrame(
+      corpus.filter(col("__id__") === "0").select(col("__id__"), col("vector")))
     def point(nProbe: Int, os: Int): Unit = {
       Ann.ivfBqTopK(hy, q1, "__id__", "vector",
         k = 10, nProbe = nProbe, oversample = os).collect() // warm
