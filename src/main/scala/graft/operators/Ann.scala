@@ -1477,7 +1477,9 @@ object Ann {
     *    the window's order — cdist DESC NULLS LAST, cluster ASC — is
     *    applied in Scala;
     *  - nomination is ONE job over (id, cluster, sig) of the probed
-    *    dirs, the O4 gate kept, reduced by [[partitionTopK]];
+    *    dirs, the O4 gate kept, scored by the
+    *    [[graft.functions.HammingDist]] expression against each probing
+    *    query's `qsig`, reduced by [[partitionTopK]];
     *  - rerank is ONE job over (id, v) of the same dirs filtered to the
     *    nominees, scored by the [[graft.functions.VectorDot]] expression
     *    against each nominating query's `qvn`, reduced the same way;
@@ -1508,7 +1510,8 @@ object Ann {
       // a null query vector has no signature: the distributed plan's
       // null Hamming scores never enter a heap, so it gets no hits
       .filterNot(_.isNullAt(1))
-      .map(r => r.getInt(0) -> (r.getSeq[Double](1).toArray, r.getSeq[Long](2).toArray))
+      .map(r => r.getInt(0) ->
+        (r.getSeq[Double](1).toArray, ArrayData.toArrayData(r.getSeq[Long](2).toArray)))
       .toMap
     def closer(a: Row, b: Row): Boolean = {
       val c = (a.isNullAt(2), b.isNullAt(2)) match {
@@ -1520,7 +1523,7 @@ object Ann {
       if (c != 0) c < 0 else a.getInt(1) < b.getInt(1)
     }
     // cluster -> (query, qsig) of every query probing it
-    val probersOf: Map[Int, Array[(Int, Array[Long])]] = cdist.toSeq
+    val probersOf: Map[Int, Array[(Int, ArrayData)]] = cdist.toSeq
       .groupBy(_.getInt(0)).toSeq
       .filter { case (qi, _) => encoded.contains(qi) }
       .flatMap { case (qi, rs) =>
@@ -1530,23 +1533,19 @@ object Ann {
       if (probersOf.isEmpty) Map.empty[Int, Array[ScoredId]]
       else {
         val pruned = index.lists.filter(col("cluster").isin(probersOf.keys.toSeq.sorted: _*))
+        val hamming = graft.functions.HammingDist(
+          BoundReference(0, ArrayType(LongType), nullable = true),
+          BoundReference(1, ArrayType(LongType), nullable = true))
         val nominees = partitionTopK(
           gateAllowed(pruned, allowed)
             .select(col("id").cast(StringType).as("id"), col("cluster"), col("sig")),
           k * oversample) { r =>
           if (r.isNullAt(2)) Iterator.empty
           else {
-            val sig = r.getSeq[Long](2)
-            probersOf.getOrElse(r.getInt(1), Array.empty[(Int, Array[Long])]).iterator
+            val sig = ArrayData.toArrayData(r.getSeq[Long](2).toArray)
+            probersOf.getOrElse(r.getInt(1), Array.empty[(Int, ArrayData)]).iterator
               .map { case (qi, qsig) =>
-                var h = 0
-                var w = 0
-                while (w < math.min(sig.length, qsig.length)) {
-                  h += java.lang.Long.bitCount(sig(w) ^ qsig(w))
-                  w += 1
-                }
-                (qi, -h.toDouble)
-              }
+                (qi, -hamming.eval(InternalRow(sig, qsig)).asInstanceOf[Int].toDouble) }
           }
         }
         // nominee id -> nominating queries (with multiplicity, as the
