@@ -216,27 +216,34 @@ object Bench {
         // nProbe=4/8 on the sf fixtures). Commit the recall-latency
         // CURVE: nProbe=64 degrades gracefully to the full binary scan
         // (the bq tier's operating point), latency ∝ probed fraction.
-        // the queries are driver-resident (collected once, untimed), the
-        // shape of a caller holding its query vectors in memory
-        val q1 = SparkEntry.driverFrame(cached.df.filter(col("__id__") === "0")
-          .select(col("__id__"), col("vector")))
+        val q1 = cached.df.filter(col("__id__") === "0")
+          .select(col("__id__"), col("vector"))
+        // the same query collected once (untimed): the shape of a caller
+        // holding its query vector in memory, which the probe serves on
+        // the driver; q1 itself takes the distributed placement
+        val q1Local = SparkEntry.driverFrame(q1)
         val qids = hnswQueryVecs.map(_._1)
-        val qdf = SparkEntry.driverFrame(cached.df.filter(col("__id__").isin(qids: _*))
-          .select(col("__id__"), col("vector")))
+        val qdf = cached.df.filter(col("__id__").isin(qids: _*))
+          .select(col("__id__"), col("vector"))
         // oversample scales WITH nProbe: the DataFrame nomination keeps a
         // single global top-(k·os) where the serving tier keeps k·os per
         // slab, so matching the tier's rerank volume at full probe width
         // needs os ≈ 16 × nBlocks (np64/os512 reranks ~5% of the corpus
         // — still 20× fewer f32 bytes than the exact scan)
-        def hybridPoint(nProbe: Int, os: Int): (Double, Double) = {
-          graft.operators.Ann.ivfBqTopK(hy, q1, "__id__", "vector",
+        def probeTime(q: org.apache.spark.sql.DataFrame, nProbe: Int, os: Int): Double = {
+          graft.operators.Ann.ivfBqTopK(hy, q, "__id__", "vector",
             k = 10, nProbe = nProbe, oversample = os).collect() // warm
           System.gc()
-          val t = median3 { () =>
-            graft.operators.Ann.ivfBqTopK(hy, q1, "__id__", "vector",
+          median3 { () =>
+            graft.operators.Ann.ivfBqTopK(hy, q, "__id__", "vector",
               k = 10, nProbe = nProbe, oversample = os).collect()
             ()
           }
+        }
+        // (q1 time, q1Local time, recall over qdf)
+        def hybridPoint(nProbe: Int, os: Int): (Double, Double, Double) = {
+          val t = probeTime(q1, nProbe, os)
+          val tLocal = probeTime(q1Local, nProbe, os)
           val hits = graft.operators.Ann.ivfBqTopK(hy, qdf, "__id__", "vector",
               k = 10, nProbe = nProbe, oversample = os)
             .collect().map(r => r.getString(0) -> r.getString(2))
@@ -244,17 +251,20 @@ object Bench {
           val rec = hnswQueryVecs.map { case (id, _) =>
             hits.getOrElse(id, Set.empty[String]).count(exact(id).contains) / 10.0
           }.sum / hnswQueryVecs.length
-          (t, rec)
+          (t, tLocal, rec)
         }
-        val (tNp8, rNp8) = hybridPoint(8, 64)
-        val (tNp32, rNp32) = hybridPoint(32, 128)
-        val (tNp64, rNp64) = hybridPoint(64, 512)
+        val (tNp8, tlNp8, rNp8) = hybridPoint(8, 64)
+        val (tNp32, tlNp32, rNp32) = hybridPoint(32, 128)
+        val (tNp64, tlNp64, rNp64) = hybridPoint(64, 512)
         Map("ref_ivfbq_build_100k_d1024" -> tIvfBqBuild,
           "ref_query_ivfbq_100k_d1024" -> tNp8,
+          "ref_query_ivfbq_local_100k_d1024" -> tlNp8,
           "ref_ivfbq_recall10_100k_d1024" -> rNp8,
           "ref_query_ivfbq_np32_100k_d1024" -> tNp32,
+          "ref_query_ivfbq_local_np32_100k_d1024" -> tlNp32,
           "ref_ivfbq_recall10_np32_100k_d1024" -> rNp32,
           "ref_query_ivfbq_np64_100k_d1024" -> tNp64,
+          "ref_query_ivfbq_local_np64_100k_d1024" -> tlNp64,
           "ref_ivfbq_recall10_np64_100k_d1024" -> rNp64)
       } catch { case _: Throwable => Map.empty }
       // release in finally-position: a failed hybrid point must not pin

@@ -2,7 +2,8 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.BoundReference
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, InterpretedOrdering}
+import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, Sort}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -1361,47 +1362,63 @@ object Ann {
     * left-semi join BEFORE the signature scan.
     *
     * The query frame picks where this runs:
-    *  - DRIVER placement ([[ivfBqProbeOnDriver]]) when the queries are
-    *    already driver-resident and driver-sized — the frame optimizes
-    *    to a `LocalRelation` and its Q x nLists centroid pairs
-    *    (Q x nLists x dim doubles) fit
-    *    `VectorStore.DefaultBroadcastBatchBytes`. Probe selection runs
-    *    with no job; nomination and rerank are one scan job each.
+    *  - DRIVER placement ([[ivfBqProbeOnDriver]]) for driver-resident
+    *    queries with a few thousand nominees ([[driverSizedQueries]]). Probe
+    *    selection runs with no job; nomination and rerank are one scan
+    *    job each.
     *  - DISTRIBUTED placement ([[ivfBqProbeDistributed]]) for every other
     *    frame: probe selection, nomination and rerank are joins, so a
     *    query batch of millions of rows never funnels through the
     *    driver.
     * Both return the same rows: (qid, rank, id, score), score rounded to
-    * 6 dp; qids must be distinct for the driver placement to apply. */
+    * 6 dp. */
   def ivfBqTopK(index: IvfBqIndex, queries: DataFrame, qidCol: String, qvecCol: String,
       k: Int, nProbe: Int, oversample: Int = 16,
       allowed: Option[DataFrame] = None): DataFrame = {
     require(oversample >= 1, "oversample must be >= 1")
     val q = queries.select(col(qidCol).as("qid"), col(qvecCol).as("qv"))
-    driverSizedQueries(q, index.centroids) match {
+    driverSizedQueries(q, index.centroids, k, oversample) match {
       case Some(rows) => ivfBqProbeOnDriver(index, q.schema, rows, k, nProbe, oversample, allowed)
       case None => ivfBqProbeDistributed(index, q, k, nProbe, oversample, allowed)
     }
   }
 
+  /** Most nominees (Q x k x oversample) [[ivfBqProbeOnDriver]] serves.
+    * Its driver-side work grows with them: the nominee heaps collected
+    * from every partition, the rerank's nominee filter and the
+    * per-query maps shipped with each task. On a persisted 10k x 128,
+    * 4-list layout (nProbe = 3, k = 10, local[4], 4 vCPU) the driver
+    * placement was faster than the distributed plan at every measured
+    * point up to 5120 nominees (Q = 1..16 at oversample 32, Q = 1..4
+    * at 128, Q = 1 at 512), even or faster at 10240, and slower from
+    * 20480 on. */
+  private[graft] val DriverProbeMaxNominees = 8192L
+
   /** The (qid, qv) rows of `q` when a probe over them is driver-sized:
-    * the frame is a `LocalRelation` (collecting it runs no job), its
-    * Q x nLists x dim centroid-pair doubles fit the broadcast-batch byte
-    * cap, and its qids are distinct (the distributed plan groups by qid,
-    * so duplicate qids would pool their candidates there). */
-  private def driverSizedQueries(q: DataFrame,
-      centroids: Seq[(Int, Seq[Double])]): Option[Array[Row]] =
-    q.queryExecution.optimizedPlan match {
-      case lr: org.apache.spark.sql.catalyst.plans.logical.LocalRelation =>
-        val dim = centroids.headOption.fold(0)(_._2.size).toLong
-        if (lr.data.size.toLong * centroids.size * dim * 8L >
-            VectorStore.DefaultBroadcastBatchBytes) None
-        else {
-          val rows = q.collect()
-          if (rows.map(_.get(0)).distinct.length == rows.length) Some(rows) else None
-        }
-      case _ => None
-    }
+    * the frame is driver-resident ([[driverResident]]: collecting it
+    * runs no job), its Q x k x oversample nominees stay within
+    * [[DriverProbeMaxNominees]], its Q x nLists x dim centroid-pair
+    * doubles fit the broadcast-batch byte cap, and its qids are
+    * distinct (the distributed plan groups by qid, so duplicate qids
+    * would pool their candidates there). */
+  private def driverSizedQueries(q: DataFrame, centroids: Seq[(Int, Seq[Double])],
+      k: Int, oversample: Int): Option[Array[Row]] = {
+    val dim = centroids.headOption.fold(0)(_._2.size).toLong
+    driverResident(q)
+      .filter { lr =>
+        val nq = lr.data.size.toLong
+        nq * k * oversample <= DriverProbeMaxNominees &&
+          nq * centroids.size * dim * 8L <= VectorStore.DefaultBroadcastBatchBytes
+      }
+      .map(_ => q.collect())
+      .filter(rows => rows.map(_.get(0)).distinct.length == rows.length)
+  }
+
+  /** Centroid probe order of one query: nearest first (cdist DESC, which
+    * sorts nulls last), ties to the lower cluster id. The distributed
+    * placement ranks by it in a window; the driver placement sorts by
+    * the same sort orders with Catalyst's interpreted ordering. */
+  private val ivfBqProbeOrder: Seq[Column] = Seq(col("cdist").desc, col("cluster").asc)
 
   /** O4 gate shared by both placements: left-semi join on the allowed
     * ids BEFORE any signature is read. */
@@ -1426,7 +1443,7 @@ object Ann {
     import spark.implicits._
     val cdf = index.centroids.toDF("cluster", "cvec")
     val probeW = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("qid")).orderBy(col("cdist").desc, col("cluster"))
+      .partitionBy(col("qid")).orderBy(ivfBqProbeOrder: _*)
     // materialize the probe frame once (Q×nProbe rows): it feeds the
     // cluster-id pruning collect, the nomination join, and the rerank
     val probes = q.crossJoin(broadcast(cdf))
@@ -1474,8 +1491,8 @@ object Ann {
     *    `LocalRelation`s, which Catalyst folds on the driver (no job;
     *    the kernels' interpreted and codegen paths run one sequential
     *    fold, so the values are bitwise those of the distributed plan);
-    *    the window's order — cdist DESC NULLS LAST, cluster ASC — is
-    *    applied in Scala;
+    *    each query's centroids are sorted by [[ivfBqProbeOrder]], the
+    *    distributed window's order;
     *  - nomination is ONE job over (id, cluster, sig) of the probed
     *    dirs, the O4 gate kept, scored by the
     *    [[graft.functions.HammingDist]] expression against each probing
@@ -1494,13 +1511,17 @@ object Ann {
       spark.createDataFrame(java.util.Arrays.asList(rows: _*), StructType(fields))
     val qiField = StructField("qi", IntegerType, nullable = false)
     val qvField = qSchema("qv")
-    val cdist = local(
+    val cdistDf = local(
       for ((r, i) <- qRows.toSeq.zipWithIndex; (c, cv) <- index.centroids)
         yield Row(i, r.get(1), c, cv),
       qiField, qvField, StructField("cluster", IntegerType, nullable = false),
       StructField("cvec", ArrayType(DoubleType, containsNull = false), nullable = false))
       .select(col("qi"), col("cluster"), cosineD(col("qv"), col("cvec")).as("cdist"))
-      .collect()
+    // (qi, cluster, cdist) rows, and the probe order bound to them
+    val cdist = cdistDf.queryExecution.executedPlan.executeCollect()
+    val probeOrder = cdistDf.sort(ivfBqProbeOrder: _*).queryExecution.analyzed match {
+      case s: Sort => new InterpretedOrdering(s.order, s.child.output)
+    }
     val encoded = local(qRows.toSeq.zipWithIndex.map { case (r, i) => Row(i, r.get(1)) },
         qiField, qvField)
       .select(col("qi"),
@@ -1513,21 +1534,12 @@ object Ann {
       .map(r => r.getInt(0) ->
         (r.getSeq[Double](1).toArray, ArrayData.toArrayData(r.getSeq[Long](2).toArray)))
       .toMap
-    def closer(a: Row, b: Row): Boolean = {
-      val c = (a.isNullAt(2), b.isNullAt(2)) match {
-        case (false, false) =>
-          val (x, y) = (a.getDouble(2), b.getDouble(2))
-          if (x == y) 0 else java.lang.Double.compare(y, x)
-        case (an, bn) => java.lang.Boolean.compare(an, bn)
-      }
-      if (c != 0) c < 0 else a.getInt(1) < b.getInt(1)
-    }
     // cluster -> (query, qsig) of every query probing it
     val probersOf: Map[Int, Array[(Int, ArrayData)]] = cdist.toSeq
       .groupBy(_.getInt(0)).toSeq
       .filter { case (qi, _) => encoded.contains(qi) }
       .flatMap { case (qi, rs) =>
-        rs.sortWith(closer).take(nProbe).map(r => r.getInt(1) -> (qi, encoded(qi)._2)) }
+        rs.sorted(probeOrder).take(nProbe).map(r => r.getInt(1) -> (qi, encoded(qi)._2)) }
       .groupBy(_._1).map { case (c, ps) => c -> ps.map(_._2).toArray }
     val hits =
       if (probersOf.isEmpty) Map.empty[Int, Array[ScoredId]]
@@ -2714,19 +2726,42 @@ object Ann {
       rootPath: org.apache.hadoop.fs.Path): Unit = {
     if (!fs.exists(rootPath)) return
     val tmpSuffixes = Seq(".compact.tmp", ".rewrite.tmp", ".compact.stage")
-    val oldSuffixes = Seq(".compact.old", ".rewrite.old")
     fs.listStatus(rootPath).foreach { st =>
       val nm = st.getPath.getName
       if (st.isDirectory && tmpSuffixes.exists(nm.endsWith)) fs.delete(st.getPath, true)
-      else if (st.isDirectory && oldSuffixes.exists(nm.endsWith)) {
-        val orig = new org.apache.hadoop.fs.Path(rootPath,
-          oldSuffixes.foldLeft(nm.stripPrefix("."))(_.stripSuffix(_)))
+      else if (st.isDirectory) renamedAwayOriginal(rootPath, nm).foreach { orig =>
         if (fs.exists(orig)) fs.delete(st.getPath, true)
-        else require(fs.rename(st.getPath, orig),
-          s"recovery rename of $nm back to ${orig.getName} failed")
+        else restoreRenamedAway(fs, st.getPath, orig)
       }
     }
   }
+
+  /** The read-path half of [[recoverStagedDirs]]: only restore a
+    * `.…old` dir whose partition dir is missing (the one state in which
+    * `.old` holds the only copy), the way the inverted index's probes
+    * heal. It deletes nothing — a stage or tmp dir may belong to a swap
+    * still running on another thread, and a leftover `.old` is dropped
+    * by the next writer's full sweep. One root listing. */
+  private[graft] def restoreMissingDirs(fs: org.apache.hadoop.fs.FileSystem,
+      rootPath: org.apache.hadoop.fs.Path): Unit = {
+    if (!fs.exists(rootPath)) return
+    fs.listStatus(rootPath).foreach { st =>
+      if (st.isDirectory) renamedAwayOriginal(rootPath, st.getPath.getName)
+        .filterNot(fs.exists)
+        .foreach(restoreRenamedAway(fs, st.getPath, _))
+    }
+  }
+
+  /** The partition dir a `.<dir>.compact.old` / `.<dir>.rewrite.old`
+    * name was renamed away from. */
+  private def renamedAwayOriginal(rootPath: org.apache.hadoop.fs.Path,
+      nm: String): Option[org.apache.hadoop.fs.Path] =
+    Seq(".compact.old", ".rewrite.old").find(nm.endsWith).map(sfx =>
+      new org.apache.hadoop.fs.Path(rootPath, nm.stripPrefix(".").stripSuffix(sfx)))
+
+  private def restoreRenamedAway(fs: org.apache.hadoop.fs.FileSystem,
+      old: org.apache.hadoop.fs.Path, orig: org.apache.hadoop.fs.Path): Unit =
+    require(fs.rename(old, orig), s"recovery rename of ${old.getName} back to ${orig.getName} failed")
 
   /** Rewrite one partition directory keeping only rows NOT matching
     * `drop`, via the same crash-safe two-rename swap as [[compactDirs]]:
@@ -2770,15 +2805,23 @@ object Ann {
     }
   }
 
-  /** Distinct rows of a small key projection. A frame that optimizes
-    * to a `LocalRelation` (a projection over driver-resident rows folds
-    * on the driver) is collected — no job — and deduplicated on the
-    * driver; any other frame keeps the distributed `distinct`. */
-  private[graft] def distinctRows(df: DataFrame): Array[Row] =
+  /** The `LocalRelation` a frame optimizes to when its rows already sit
+    * on the driver (a projection or filter over driver-resident rows
+    * folds there), so collecting it runs no job. The one test behind
+    * every "do it on the driver" choice: [[ivfBqTopK]]'s placement,
+    * [[distinctRows]] and [[stageIdFrame]]. */
+  private[graft] def driverResident(df: DataFrame): Option[LocalRelation] =
     df.queryExecution.optimizedPlan match {
-      case _: org.apache.spark.sql.catalyst.plans.logical.LocalRelation => df.collect().distinct
-      case _ => df.distinct().collect()
+      case lr: LocalRelation => Some(lr)
+      case _ => None
     }
+
+  /** Distinct rows of a small key projection. A driver-resident frame
+    * is collected — no job — and deduplicated on the driver; any other
+    * frame keeps the distributed `distinct`. */
+  private[graft] def distinctRows(df: DataFrame): Array[Row] =
+    if (driverResident(df).isDefined) df.collect().distinct
+    else df.distinct().collect()
 
   /** Normalize a caller-supplied id frame (first column = the ids) to a
     * single distinct string `id` column, materialized once
@@ -2789,9 +2832,8 @@ object Ann {
     * persisted-layout DataFrame delete (IVF / BQ / hybrid / IVF×PQ /
     * dedup index / inverted index / partitioned store). */
   private[graft] def stageIdFrame(ids: DataFrame): (DataFrame, Long) = {
-    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
     import org.apache.spark.sql.types.{IntegerType, LongType}
-    ids.queryExecution.optimizedPlan match {
+    driverResident(ids) match {
       // Driver-resident literal list — the Seq overloads' `toDF` shape
       // (reference-parity small deletes). Distinct LOCALLY: zero Spark
       // jobs (the generic arm pays a distinct shuffle + checkpoint +
@@ -2799,7 +2841,7 @@ object Ann {
       // broadcast hint serves without a stage. Only for types whose
       // JVM toString equals Spark's cast-to-string (id columns are
       // strings or integral keys everywhere in this library).
-      case lr: LocalRelation if lr.output.nonEmpty &&
+      case Some(lr) if lr.output.nonEmpty &&
           (lr.output.head.dataType == StringType ||
             lr.output.head.dataType == LongType ||
             lr.output.head.dataType == IntegerType) =>

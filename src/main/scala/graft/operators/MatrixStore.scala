@@ -462,7 +462,7 @@ object MatrixStore {
     import org.apache.spark.sql.functions._
     import org.apache.spark.sql.types._
     import spark.implicits._
-    VectorStore.Partitioned.heal(spark, path)
+    VectorStore.Partitioned.heal(spark, path, reader = true)
     val meta = VectorStore.readMeta(spark, s"$path/_meta.json")
     val nBuckets = meta.additionalData.getOrElse("nBuckets",
       throw new IllegalArgumentException(

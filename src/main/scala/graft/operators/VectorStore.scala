@@ -328,22 +328,27 @@ object VectorStore {
       writeSidecar(store.df.sparkSession, s"$path/_meta.json", meta)
     }
 
-    /** Heal crash residue of an interrupted [[compact]] swap
-      * ([[Ann.recoverStagedDirs]]) before the layout is read or
-      * rewritten: between compaction's rename-away and rename-in the
-      * bucket dir is missing and its `.old` copy holds the only rows.
-      * Unhealed, an upsert would write a fresh dir holding only the
-      * batch (and the next compact would then drop the `.old` copy as a
-      * leftover), and a delete would miss the rows that a later heal
-      * restores. One root listing. */
-    private[graft] def heal(spark: SparkSession, path: String): Unit = {
+    /** Heal crash residue of an interrupted [[compact]] swap before the
+      * layout is read or rewritten: between compaction's rename-away and
+      * rename-in the bucket dir is missing and its `.old` copy holds the
+      * only rows. Unhealed, an upsert would write a fresh dir holding
+      * only the batch (and the next compact would then drop the `.old`
+      * copy as a leftover), and a delete would miss the rows that a
+      * later heal restores. Writers ([[upsert]], [[delete]]) sweep all
+      * residue ([[Ann.recoverStagedDirs]]); readers ([[load]],
+      * [[MatrixStore.fromPartitionedLayout]]) only restore a missing
+      * bucket ([[Ann.restoreMissingDirs]]), so a read never deletes the
+      * stage of a compaction that `StreamingOps.upsertStream` may be
+      * running. */
+    private[graft] def heal(spark: SparkSession, path: String, reader: Boolean): Unit = {
       val data = new org.apache.hadoop.fs.Path(s"$path/data")
-      Ann.recoverStagedDirs(data.getFileSystem(spark.sparkContext.hadoopConfiguration), data)
+      val fs = data.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      if (reader) Ann.restoreMissingDirs(fs, data) else Ann.recoverStagedDirs(fs, data)
     }
 
     /** Open the bucketed layout as a plain store (bucket column dropped). */
     def load(spark: SparkSession, path: String): VectorStore = {
-      heal(spark, path)
+      heal(spark, path, reader = true)
       val meta = readMeta(spark, s"$path/_meta.json")
       VectorStore(spark.read.parquet(s"$path/data").drop(BucketCol),
         meta.embeddingDim, meta.metric, meta.additionalData - "nBuckets")
@@ -354,7 +359,7 @@ object VectorStore {
       * existing ids get the new normalized vector and KEEP their old
       * metadata; new ids are appended whole. */
     def upsert(spark: SparkSession, path: String, batch: DataFrame): Unit = {
-      heal(spark, path)
+      heal(spark, path, reader = false)
       val meta = readMeta(spark, s"$path/_meta.json")
       val nBuckets = meta.additionalData("nBuckets").asInt()
       val full = spark.read.parquet(s"$path/data")
@@ -404,7 +409,7 @@ object VectorStore {
       * there is the plan-visible partition-prune witness, not an id
       * list). */
     def delete(spark: SparkSession, path: String, ids: DataFrame): Unit = {
-      heal(spark, path)
+      heal(spark, path, reader = false)
       val meta = readMeta(spark, s"$path/_meta.json")
       val nBuckets = meta.additionalData("nBuckets").asInt()
       val (idDf0, n) = Ann.stageIdFrame(ids)

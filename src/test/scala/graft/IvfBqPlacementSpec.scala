@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -22,8 +21,7 @@ class IvfBqPlacementSpec extends AnyFunSuite {
   /** Four corpus queries — a frame that is NOT driver-resident. */
   private lazy val queries: DataFrame = e.filter(col("vec_id") < 4)
 
-  private def isDriverPlaced(df: DataFrame): Boolean =
-    df.queryExecution.optimizedPlan.isInstanceOf[LocalRelation]
+  private def isDriverPlaced(df: DataFrame): Boolean = Ann.driverResident(df).isDefined
 
   /** Probe through both placements and require row-identical results. */
   private def samePlacements(idx: Ann.IvfBqIndex, k: Int, nProbe: Int, oversample: Int,
@@ -39,20 +37,27 @@ class IvfBqPlacementSpec extends AnyFunSuite {
   }
 
   test("ivfBq placements: driver and distributed probes are row-identical") {
-    // nProbe 1..nLists x oversample from small up to total
-    for (nProbe <- 1 to 4; os <- Seq(1, 3, n))
+    // nProbe 1..nLists x oversample from small up to total (k x os >= n)
+    val total = n / 5 + 1
+    for (nProbe <- 1 to 4; os <- Seq(1, 3, total))
       assert(samePlacements(hy, k = 5, nProbe, os) > 0)
     // the O4 gate, on a sparse and on the total operating point
     val allow = e.filter(col("vec_id") % 3 === 0).select(col("vec_id"))
     samePlacements(hy, k = 5, nProbe = 2, oversample = 3, allowed = Some(allow))
-    samePlacements(hy, k = 5, nProbe = 4, oversample = n, allowed = Some(allow))
+    samePlacements(hy, k = 5, nProbe = 4, oversample = total, allowed = Some(allow))
     // k above the candidate count: every nominee comes back
     assert(samePlacements(hy, k = n + 10, nProbe = 1, oversample = 1) > 4 * 5)
-    assert(samePlacements(hy, k = n + 10, nProbe = 4, oversample = n) == 4L * n)
+    assert(samePlacements(hy, k = n + 10, nProbe = 4, oversample = 1) == 4L * n)
     // duplicate qids pool their candidates in the distributed plan, so
     // such a frame keeps the distributed placement even when local
     val dup = SparkEntry.driverFrame(queries.select(lit(1L).as("vec_id"), col("embedding")))
     assert(!isDriverPlaced(Ann.ivfBqTopK(hy, dup, "vec_id", "embedding", 3, 2)))
+    // so does a local frame with more nominees (Q x k x oversample)
+    // than the driver placement serves
+    val os = (Ann.DriverProbeMaxNominees / (4 * 5) + 1).toInt
+    val drv = SparkEntry.driverFrame(queries)
+    assert(isDriverPlaced(Ann.ivfBqTopK(hy, drv, "vec_id", "embedding", 5, 2, os - 1)))
+    assert(!isDriverPlaced(Ann.ivfBqTopK(hy, drv, "vec_id", "embedding", 5, 2, os)))
   }
 
   test("ivfBq placements agree on a persisted layout with lists emptied by deletes") {
@@ -66,7 +71,7 @@ class IvfBqPlacementSpec extends AnyFunSuite {
     assert(touched == Seq(emptied))
     assert(!new java.io.File(s"$path/lists/cluster=$emptied").exists, "emptied dir removed")
     val idx = Ann.ivfBqLoad(spark, path)
-    for (nProbe <- 1 to 4; os <- Seq(2, n)) samePlacements(idx, k = 4, nProbe, os)
+    for (nProbe <- 1 to 4; os <- Seq(2, n / 4 + 1)) samePlacements(idx, k = 4, nProbe, os)
   }
 
   test("a local-frame read of a saved index runs <= 1 job to load and <= 3 to probe") {

@@ -1057,6 +1057,17 @@ class VectorStoreSpec extends AnyFunSuite {
     assert(ids(ld) == rows.map(_._1).toSet)
     assert(graft.operators.MatrixStore.fromPartitionedLayout(spark, crashedLayout())
       .query(Array(1f, 1f, 0f, 0f), n).map(_._1).toSet == rows.map(_._1).toSet)
+    // a read only restores a missing bucket: it deletes neither the stage
+    // of a compaction that may still be running nor a leftover `.old`
+    val live = crashedLayout()
+    val other = bucketOf.values.find(_ != victim).get
+    val stage = new org.apache.hadoop.fs.Path(s"$live/data/.compact.stage/__bucket__=$victim")
+    val leftover = new org.apache.hadoop.fs.Path(s"$live/data/.__bucket__=$other.compact.old")
+    require(fs.mkdirs(stage) && fs.mkdirs(leftover))
+    assert(ids(live) == rows.map(_._1).toSet)
+    graft.operators.MatrixStore.fromPartitionedLayout(spark, live)
+    assert(fs.exists(stage) && fs.exists(leftover), "a read must not delete swap residue")
+    assert(new java.io.File(s"$live/data/__bucket__=$victim").exists)
   }
 
   test("ingest streams repay their own small-file debt on the compact cadence") {

@@ -35,22 +35,26 @@ object HybridProfile {
     val lists = built.lists.cache(); lists.count()
     val hy = built.copy(lists = lists)
     println(f"[hybrid] build ${(System.nanoTime() - t0) / 1e9}%.2f s")
-    val q1 = graft.SparkEntry.driverFrame(
-      corpus.filter(col("__id__") === "0").select(col("__id__"), col("vector")))
-    def point(nProbe: Int, os: Int): Unit = {
-      Ann.ivfBqTopK(hy, q1, "__id__", "vector",
-        k = 10, nProbe = nProbe, oversample = os).collect() // warm
-      val ts = (0 until reps).map { _ =>
-        System.gc()
-        val t = System.nanoTime()
-        Ann.ivfBqTopK(hy, q1, "__id__", "vector",
-          k = 10, nProbe = nProbe, oversample = os).collect()
-        (System.nanoTime() - t) / 1e9
+    // the query as a frame over the cached corpus (distributed
+    // placement) and collected into a driver-resident frame (driver
+    // placement), the two shapes Bench times
+    val q1 = corpus.filter(col("__id__") === "0").select(col("__id__"), col("vector"))
+    val q1Local = graft.SparkEntry.driverFrame(q1)
+    def point(nProbe: Int, os: Int): Unit =
+      for ((shape, q) <- Seq("frame" -> q1, "local" -> q1Local)) {
+        Ann.ivfBqTopK(hy, q, "__id__", "vector",
+          k = 10, nProbe = nProbe, oversample = os).collect() // warm
+        val ts = (0 until reps).map { _ =>
+          System.gc()
+          val t = System.nanoTime()
+          Ann.ivfBqTopK(hy, q, "__id__", "vector",
+            k = 10, nProbe = nProbe, oversample = os).collect()
+          (System.nanoTime() - t) / 1e9
+        }
+        println(f"[hybrid] $shape%-5s np=$nProbe%-3d os=$os%-4d " +
+          ts.map(t => f"$t%.3f").mkString(" ") +
+          f"  median=${ts.sorted.apply(reps / 2)}%.3f s")
       }
-      println(f"[hybrid] np=$nProbe%-3d os=$os%-4d " +
-        ts.map(t => f"$t%.3f").mkString(" ") +
-        f"  median=${ts.sorted.apply(reps / 2)}%.3f s")
-    }
     point(8, 64)
     point(32, 128)
     point(64, 512)
