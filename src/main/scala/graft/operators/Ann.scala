@@ -1363,9 +1363,9 @@ object Ann {
     *
     * The query frame picks where this runs:
     *  - DRIVER placement ([[ivfBqProbeOnDriver]]) for driver-resident
-    *    queries with a few thousand nominees ([[driverSizedQueries]]). Probe
-    *    selection runs with no job; nomination and rerank are one scan
-    *    job each.
+    *    queries with a few thousand nominees ([[driverSizedQueries]]).
+    *    Probe selection runs with no job; nomination and rerank are one
+    *    scan job each.
     *  - DISTRIBUTED placement ([[ivfBqProbeDistributed]]) for every other
     *    frame: probe selection, nomination and rerank are joins, so a
     *    query batch of millions of rows never funnels through the
@@ -1390,8 +1390,8 @@ object Ann {
     * 4-list layout (nProbe = 3, k = 10, local[4], 4 vCPU) the driver
     * placement was faster than the distributed plan at every measured
     * point up to 5120 nominees (Q = 1..16 at oversample 32, Q = 1..4
-    * at 128, Q = 1 at 512), even or faster at 10240, and slower from
-    * 20480 on. */
+    * at 128, Q = 1 at 512), within 2% or faster at 10240, and slower
+    * from 20480 on. */
   private[graft] val DriverProbeMaxNominees = 8192L
 
   /** The (qid, qv) rows of `q` when a probe over them is driver-sized:
@@ -2738,8 +2738,7 @@ object Ann {
 
   /** The read-path half of [[recoverStagedDirs]]: only restore a
     * `.…old` dir whose partition dir is missing (the one state in which
-    * `.old` holds the only copy), the way the inverted index's probes
-    * heal. It deletes nothing — a stage or tmp dir may belong to a swap
+    * `.old` holds the only copy). It deletes nothing — a stage or tmp dir may belong to a swap
     * still running on another thread, and a leftover `.old` is dropped
     * by the next writer's full sweep. One root listing. */
   private[graft] def restoreMissingDirs(fs: org.apache.hadoop.fs.FileSystem,
